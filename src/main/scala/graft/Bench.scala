@@ -51,9 +51,9 @@ object Bench {
         // the stored-generated-column copy must land untimed too.
         "q_scan_partition_hash", "q_scan_partition_list",
         "q_generated_col",
-        // r10 audit of every `_SUCCESS`-guarded lazy build found ONE
-        // uncovered layout: the persisted PQ index (codebooks+codes).
-        // Every other cacheDir site is warmed by an entry above
+        // r10 audit of every lazy layout build (Layouts.once) found
+        // ONE uncovered layout: the persisted PQ index (codebooks+codes).
+        // Every other fingerprint-keyed layout is warmed by an entry above
         // (timetravel via q_time_travel, mv via q_mv_refresh, backup,
         // corpus fingerprints via d_dedup_incremental, the three
         // partitioned facts, the IVF index via s_ann_ivf_probe).

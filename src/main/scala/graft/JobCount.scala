@@ -50,10 +50,10 @@ object JobCount {
     val out = names.map { n =>
       // Listener events are posted asynchronously — drain before and
       // after each measured entry so counters attribute correctly.
-      Thread.sleep(500) // listener events post asynchronously; drain
+      org.apache.spark.sql.GraftSqlShim.drainListenerBus(spark)
       val (j0, s0, t0) = (jobs, stages, tasks)
       byName(n).run(t).write.format("noop").mode("overwrite").save()
-      Thread.sleep(500) // listener events post asynchronously; drain
+      org.apache.spark.sql.GraftSqlShim.drainListenerBus(spark)
       s""""$n":{"jobs":${jobs - j0},"stages":${stages - s0},"tasks":${tasks - t0}}"""
     }
     println("JOBCOUNT " + out.mkString("{", ",", "}"))

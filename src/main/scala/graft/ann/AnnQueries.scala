@@ -2,6 +2,7 @@ package graft.ann
 
 import graft.{Q, Tables}
 import graft.functions.VectorFns._
+import graft.sources.Layouts
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -173,19 +174,11 @@ object AnnQueries {
     // s_ann_ivf, so the two entries split the cost story: s_ann_ivf
     // = build+probe, this = probe only.
     Q("s_ann_ivf_probe", None) { t =>
-      // Cache key carries the build parameters AND a content
-      // fingerprint of the source data (file names/sizes/mtimes) —
-      // regenerated data at the same path, or two data dirs whose
-      // String.hashCode collides, get distinct index dirs instead of
-      // silently serving a stale index. A code change to
-      // IvfIndex.build itself still requires wiping /tmp/graft_ivf_*
-      // (acceptable for a dev cache — IvfIndexSpec cross-checks
-      // probe == fresh build).
-      val (c, iters) = (16, 2)
-      val dir = IvfIndex.sharedCacheDir(t.dir, c, iters)
-      if (!new java.io.File(s"$dir/centroids/_SUCCESS").exists())
-        IvfIndex.writeIndex(vecs(t), dir, c = c, iters = iters)
-      IvfIndex.probeIndex(t.spark, dir,
+      // The layout key (Layouts.root) carries the build parameters
+      // and a content fingerprint of the source data, not the
+      // builder's code: a change to IvfIndex.build needs the layout
+      // roots wiped (IvfIndexSpec cross-checks probe == fresh build).
+      IvfIndex.probeIndex(t.spark, IvfIndex.sharedIndex(t),
         t.embeddings.filter(col("vec_id") < 10)
           .select(col("vec_id").as("qid"), toDouble(col("embedding")).as("qv")),
         nprobe = 4, topk = 3)
@@ -226,12 +219,10 @@ object AnnQueries {
     // s_ann_ivf / s_ann_ivf_probe.
     Q("s_ann_pq_probe", None) { t =>
       val (m, s, k, iters) = (8, 8, 16, 2)
-      val F = graft.sources.Formats
-      val dir = F.cacheDir(
-        s"/tmp/graft_pq_m${m}s${s}k${k}i${iters}_${F.sanitize(t.dir)}",
-        F.contentFingerprint(s"${t.dir}/embeddings.parquet"))
-      if (!new java.io.File(s"$dir/codebooks/_SUCCESS").exists())
-        PqIndex.writeIndex(vecs(t).select("vec_id", "v"), dir, m, s, k, iters)
+      val dir = Layouts.once(Layouts.root(s"pq_m${m}s${s}k${k}i${iters}",
+          t.dir, s"${t.dir}/embeddings.parquet")) {
+        PqIndex.writeIndex(vecs(t).select("vec_id", "v"), _, m, s, k, iters)
+      }
       val sess = t.spark
       val codes = sess.read.parquet(s"$dir/codes")
       val cent = sess.read.parquet(s"$dir/codebooks")
@@ -281,7 +272,7 @@ object AnnQueries {
       // residual PQ codebooks. Amortizing the coarse k-means is also
       // the production shape: one coarse quantizer serves every
       // downstream index variant built over it.
-      val (cells, centroids) = IvfPqIndex.coarseFromSharedCache(t, corpus)
+      val (cells, centroids) = IvfPqIndex.coarseFromSharedCache(t)
       val (codes, cent) = IvfPqIndex.residualPq(
         cells, centroids, m = 8, s = 8, k = 16, iters = 2)
       val queries = corpus.filter(col("vec_id") < 10)
@@ -310,14 +301,12 @@ object AnnQueries {
     // probe == in-query build.
     Q("s_ann_ivfpq_probe", None) { t =>
       val (c, iters, m, s, k) = (16, 2, 8, 8, 16)
-      val F = graft.sources.Formats
-      val dir = F.cacheDir(
-        s"/tmp/graft_ivfpq_c${c}i${iters}m${m}s${s}k${k}_" +
-          F.sanitize(t.dir),
-        F.contentFingerprint(s"${t.dir}/embeddings.parquet"))
-      if (!new java.io.File(s"$dir/centroids/_SUCCESS").exists())
-        IvfPqIndex.writeIndex(vecs(t).select("vec_id", "v"), dir,
+      val dir = Layouts.once(Layouts.root(
+          s"ivfpq_c${c}i${iters}m${m}s${s}k${k}", t.dir,
+          s"${t.dir}/embeddings.parquet")) {
+        IvfPqIndex.writeIndex(vecs(t).select("vec_id", "v"), _,
           c, iters, m, s, k)
+      }
       IvfPqIndex.probeIndex(t.spark, dir,
         t.embeddings.filter(col("vec_id") < 10)
           .select(col("vec_id").as("qid"),
@@ -859,10 +848,8 @@ object AnnQueries {
     // and the plan SHAPE (equi-join on cell, Σ|cell|·nprobe pairs)
     // is what this entry pins.
     Q("s_knn_graph_ivf", None) { t =>
-      val (c, iters, nprobe) = (16, 2, 12)
-      val dir = IvfIndex.sharedCacheDir(t.dir, c, iters)
-      if (!new java.io.File(s"$dir/centroids/_SUCCESS").exists())
-        IvfIndex.writeIndex(vecs(t), dir, c = c, iters = iters)
+      val nprobe = 12
+      val dir = IvfIndex.sharedIndex(t)
       val centroids = t.spark.read.parquet(s"$dir/centroids")
       val cells = t.spark.read.parquet(s"$dir/cells")
         .withColumn("nv", norm(col("v")))
@@ -974,20 +961,14 @@ object AnnQueries {
     // probe-of-rebuilt-at-fixed-centroids and pins the card
     // arithmetic on a constructed index.
     Q("s_ivf_drift", None) { t =>
-      val F = graft.sources.Formats
       val (c, iters) = (16, 2)
-      val dir = F.cacheDir(
-        s"/tmp/graft_ivfdrift_c${c}_i${iters}_${F.sanitize(t.dir)}",
-        F.contentFingerprint(s"${t.dir}/embeddings.parquet"))
-      val marker = new java.io.File(s"$dir/_APPENDED")
-      if (!marker.exists()) {
-        F.deleteRecursively(new java.io.File(dir))
+      val dir = Layouts.once(Layouts.root(s"ivfdrift_c${c}_i${iters}",
+          t.dir, s"${t.dir}/embeddings.parquet")) { dir =>
         val all = vecs(t)
         IvfIndex.writeIndex(all.filter(col("vec_id") % 5 =!= 0),
           dir, c = c, iters = iters)
         IvfIndex.appendToIndex(t.spark, dir,
           all.filter(col("vec_id") % 5 === 0))
-        require(marker.createNewFile(), s"marker exists at $dir")
       }
       IvfIndex.driftCard(t.spark, dir,
           isNew = col("vec_id") % 5 === 0, growthCap = 1.5)
@@ -1017,18 +998,13 @@ object AnnQueries {
     // no worse than the drifted generation's, and the red→green
     // flag drop on this exact staging.
     Q("s_ivf_retrain", None) { t =>
-      val F = graft.sources.Formats
       val (c, iters) = (16, 2)
-      val root = F.cacheDir(
-        s"/tmp/graft_ivfretrain_c${c}_i${iters}_${F.sanitize(t.dir)}",
-        F.contentFingerprint(s"${t.dir}/embeddings.parquet"))
-      val marker = new java.io.File(s"$root/_STAGED")
       def shifted(offset: Long) = vecs(t)
         .filter(col("vec_id") % 5 === 0)
         .select((col("vec_id") + offset).as("vec_id"),
           expr("transform(v, x -> x + 3.0d)").as("v"))
-      if (!marker.exists()) {
-        F.deleteRecursively(new java.io.File(root))
+      val root = Layouts.once(Layouts.root(s"ivfretrain_c${c}_i${iters}",
+          t.dir, s"${t.dir}/embeddings.parquet")) { root =>
         IvfIndex.initServing(
           vecs(t).filter(col("vec_id") % 5 =!= 0).select("vec_id", "v"),
           root, c = c, iters = iters)
@@ -1036,7 +1012,6 @@ object AnnQueries {
         val gen2 = IvfIndex.retrainAndSwap(t.spark, root, c, iters)
         require(gen2 == "gen_2", s"unexpected generation $gen2")
         IvfIndex.appendToServing(t.spark, root, shifted(2000000L))
-        require(marker.createNewFile(), s"marker exists at $root")
       }
       // Read-only from here (every generation is retained): the
       // pre-retrain card against gen_1, the post-retrain card
@@ -1075,31 +1050,23 @@ object AnnQueries {
     // cells → rows-only; StreamingSpec drives the same loop live
     // and pins every row including the replay-rewrite semantics.
     Q("s_drift_series", None) { t =>
-      val F = graft.sources.Formats
       val (c, iters) = (16, 2)
-      val root = F.cacheDir(
-        s"/tmp/graft_driftseries_c${c}_i${iters}_${F.sanitize(t.dir)}",
-        F.contentFingerprint(s"${t.dir}/embeddings.parquet"))
-      val marker = new java.io.File(s"$root/_STAGED")
-      val (serveRoot, deltaDir, metricsDir) =
-        (s"$root/serving", s"$root/delta", s"$root/metrics")
-      if (!marker.exists()) {
-        F.deleteRecursively(new java.io.File(root))
-        new java.io.File(root).mkdirs()
+      val root = Layouts.once(Layouts.root(s"driftseries_c${c}_i${iters}",
+          t.dir, s"${t.dir}/embeddings.parquet")) { root =>
         val all = vecs(t).select("vec_id", "v")
+        val serveRoot = s"$root/serving"
         IvfIndex.initServing(all.filter(col("vec_id") % 5 =!= 0),
           serveRoot, c = c, iters = iters)
         val sink = graft.streaming.Streams.driftDashboardSink(
-          serveRoot, deltaDir, growthCap = 1.5, flagFrac = 0.5,
-          metricsDir) _
+          serveRoot, s"$root/delta", growthCap = 1.5, flagFrac = 0.5,
+          s"$root/metrics") _
         sink(all.filter(col("vec_id") % 5 === 0)
           .filter(col("vec_id") % 3 === 0), 0L)
         sink(all.filter(col("vec_id") % 5 === 0)
           .select((col("vec_id") + 1000000L).as("vec_id"),
             expr("transform(v, x -> x + 3.0d)").as("v")), 1L)
-        require(marker.createNewFile(), s"marker exists at $root")
       }
-      t.spark.read.parquet(metricsDir)
+      t.spark.read.parquet(s"$root/metrics")
         .select(col("batch_id").cast("long").as("batch_id"),
           col("gen_before"), col("gen_after"), col("mass_new"),
           col("mass_flagged"), col("retrained").cast("int")

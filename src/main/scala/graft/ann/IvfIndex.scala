@@ -54,7 +54,12 @@ object IvfIndex {
     * and array_min over struct(key, cell) selects exactly
     * min_by(cell, struct(key, cell)) — assignments are bit-identical,
     * so every persisted layout, probe ranking and pinned recall is
-    * unchanged (IvfIndexSpec re-proves the equalities). */
+    * unchanged (IvfIndexSpec re-proves the equalities).
+    *
+    * `vec_id` contract: `idCol` is NOT a uniqueness key. Every input
+    * row yields exactly one output row, so a repeated `vec_id` is
+    * kept as separate rows (possibly in different cells); nothing
+    * here deduplicates. Callers that need unique ids dedup first. */
   private def assign(points: DataFrame, centroids: DataFrame,
       idCol: String, vCol: String): DataFrame = {
     val cents = withCC(centroids)
@@ -125,23 +130,26 @@ object IvfIndex {
     (assign(corpus, finalCents, "vec_id", "v"), finalCents)
   }
 
+  /** The persisted IVF index over a warehouse's embeddings, built
+    * once per (c, iters, source fingerprint) and returned as its dir
+    * — the ONE spelling shared by every reader of the coarse
+    * quantizer (s_ann_ivf_probe, s_knn_graph_ivf, d_dedup_semantic,
+    * q_show_index, IvfPqIndex.coarseFromSharedCache), so none can key
+    * or build the same index differently. */
+  def sharedIndex(t: graft.Tables, c: Int = 16, iters: Int = 2): String =
+    graft.sources.Layouts.once(graft.sources.Layouts.root(
+        s"ivf_c${c}_i${iters}", t.dir, s"${t.dir}/embeddings.parquet")) {
+      writeIndex(t.fan(t.embeddings)
+        .select(col("vec_id"), toDouble(col("embedding")).as("v")), _,
+        c, iters)
+    }
+
   /** Persist the index as a warehouse layout: corpus vectors
     * partitioned BY CELL (so a probe touches only its cells'
     * directories) plus the broadcast-sized centroid table. This is
     * the on-disk shape of the IVF inverted lists — at 100 TB each
     * cell directory is a self-contained shard and probing k of C
     * cells reads k/C of the bytes. */
-  /** The ONE spelling of the persisted-IVF cache location (build
-    * parameters + content fingerprint of the source), shared by
-    * s_ann_ivf_probe and IvfPqIndex.coarseFromSharedCache so the two
-    * can never key the same index differently. */
-  def sharedCacheDir(dataDir: String, c: Int, iters: Int): String = {
-    val F = graft.sources.Formats
-    F.cacheDir(
-      s"/tmp/graft_ivf_c${c}_i${iters}_${F.sanitize(dataDir)}",
-      F.contentFingerprint(s"$dataDir/embeddings.parquet"))
-  }
-
   def writeIndex(corpus: DataFrame, dir: String, c: Int,
       iters: Int): Unit = {
     val (cells, centroids) = build(corpus, c, iters)
@@ -213,7 +221,10 @@ object IvfIndex {
     * append returns exactly what a full rebuild AT THE SAME
     * CENTROIDS would return (IvfIndexSpec proves the equality);
     * what degrades as the data distribution drifts is cell BALANCE
-    * and residual size — which is what the drift card watches. */
+    * and residual size — which is what the drift card watches.
+    * Appends follow [[assign]]'s `vec_id` contract: a batch id that
+    * repeats within the batch, or is already indexed, lands as one
+    * more row — an append never deduplicates (IvfIndexSpec pins it). */
   def appendToIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, batch: DataFrame): Unit = {
     val centroids = spark.read.parquet(s"$dir/centroids")

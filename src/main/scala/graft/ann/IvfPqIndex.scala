@@ -53,16 +53,13 @@ object IvfPqIndex {
     PqIndex.build(resid, m, s, k, iters)
   }
 
-  /** The coarse quantizer from [[IvfIndex]]'s shared persisted cache
-    * (same parameters, same content-fingerprint key as
-    * s_ann_ivf_probe — written lazily on first touch): (cells with
+  /** The coarse quantizer from [[IvfIndex.sharedIndex]] (same
+    * parameters, same layout as s_ann_ivf_probe): (cells with
     * vectors, centroids). One coarse training serves every index
     * variant composed over it. */
-  def coarseFromSharedCache(t: graft.Tables, corpus: => DataFrame,
-      c: Int = 16, iters: Int = 2): (DataFrame, DataFrame) = {
-    val dir = IvfIndex.sharedCacheDir(t.dir, c, iters)
-    if (!new java.io.File(s"$dir/centroids/_SUCCESS").exists())
-      IvfIndex.writeIndex(corpus, dir, c = c, iters = iters)
+  def coarseFromSharedCache(t: graft.Tables, c: Int = 16,
+      iters: Int = 2): (DataFrame, DataFrame) = {
+    val dir = IvfIndex.sharedIndex(t, c, iters)
     (t.spark.read.parquet(s"$dir/cells")
        .select(col("vec_id"), col("cell"), col("v")),
      t.spark.read.parquet(s"$dir/centroids"))

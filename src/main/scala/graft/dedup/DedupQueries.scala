@@ -2,6 +2,7 @@ package graft.dedup
 
 import graft.{Q, Tables}
 import graft.functions.TextFns
+import graft.sources.Layouts
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -808,14 +809,12 @@ object DedupQueries {
       GROUP BY s.fp
     """)) { t =>
       val fp = md5(TextFns.normalize(col("text")).cast("binary"))
-      val F = graft.sources.Formats
-      val idxDir = F.cacheDir(
-        s"/tmp/graft_corpusfp_${F.sanitize(t.dir)}",
-        F.contentFingerprint(s"${t.dir}/documents.parquet"))
-      if (!new java.io.File(s"$idxDir/_SUCCESS").exists())
+      val idxDir = Layouts.once(Layouts.root("corpusfp", t.dir,
+          s"${t.dir}/documents.parquet")) { dir =>
         t.documents.filter(col("doc_id") % 10 =!= 0)
           .select(fp.as("fp")).distinct()
-          .write.mode("overwrite").parquet(idxDir)
+          .write.mode("overwrite").parquet(dir)
+      }
       val corpusIndex = t.documents.sparkSession.read.parquet(idxDir)
       t.documents.filter(col("doc_id") % 10 === 0)
         .select(fp.as("fp"), col("doc_id"))
@@ -841,18 +840,11 @@ object DedupQueries {
     // Signature arithmetic is engine-specific (xxhash64) →
     // rows-only; StreamingSpec drives the same gate live.
     Q("d_dedup_admit", None) { t =>
-      val F = graft.sources.Formats
-      val root = F.cacheDir(
-        s"/tmp/graft_ndadmit_${F.sanitize(t.dir)}",
-        F.contentFingerprint(s"${t.dir}/documents.parquet"))
-      val indexDir = s"$root/index"
-      val marker = new java.io.File(s"$root/_STAGED")
-      if (!marker.exists()) {
-        F.deleteRecursively(new java.io.File(root))
-        new java.io.File(root).mkdirs()
+      val root = Layouts.once(Layouts.root("ndadmit", t.dir,
+          s"${t.dir}/documents.parquet")) { root =>
         val docs = t.documents.select("doc_id", "text")
         val sink = graft.streaming.Streams
-          .neardupIngestSink(indexDir, tau = 0.5) _
+          .neardupIngestSink(s"$root/index", tau = 0.5) _
         val ticks = Seq(
           sink(docs.filter(col("doc_id") % 2 === 0), 0L),
           sink(docs.filter(col("doc_id") % 2 === 1), 1L))
@@ -862,8 +854,8 @@ object DedupQueries {
           .toDF("batch_id", "n_in", "n_novel", "n_neardup", "n_indexed")
           .coalesce(1).write.mode("overwrite")
           .parquet(s"$root/ticks")
-        require(marker.createNewFile(), s"marker exists at $root")
       }
+      val indexDir = s"$root/index"
       val ticks = t.spark.read.parquet(s"$root/ticks")
       val inIndex = t.spark.read.parquet(indexDir)
         .select(col("doc_id"), col("batch_id").cast("long").as("batch_id"))
@@ -1080,10 +1072,7 @@ object DedupQueries {
       // assignment below re-derives cells via probes), so re-running
       // the full Lloyd per entry was pure rebuild cost. One 16-row
       // read replaces two corpus-wide iteration passes.
-      val (c16, iters2) = (16, 2)
-      val ivfDir = graft.ann.IvfIndex.sharedCacheDir(t.dir, c16, iters2)
-      if (!new java.io.File(s"$ivfDir/centroids/_SUCCESS").exists())
-        graft.ann.IvfIndex.writeIndex(corpus, ivfDir, c16, iters2)
+      val ivfDir = graft.ann.IvfIndex.sharedIndex(t)
       val centroids = t.spark.read.parquet(s"$ivfDir/centroids")
       // SOFT assignment (2 nearest cells per vector): a near-dup pair
       // split by a hard cell boundary still co-occurs in one of the

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
+import graft.sources.Layouts
 import org.apache.spark.sql.functions._
 
 /** Batch DML analogs of the reference's write executors
@@ -387,33 +388,32 @@ object Dml {
     },
   )
 
+  /** Pre-aggregated partial of `orders` per priority — the MV's
+    * snapshot and its delta share one definition. */
+  private def mvPartial(df: org.apache.spark.sql.DataFrame) =
+    df.groupBy("o_orderpriority")
+      .agg(count(lit(1)).as("n_orders"),
+        sum(col("o_totalprice").cast("decimal(18,2)")).as("rev"))
+
+  private val mvSplit = "1997-01-01"
+
   /** The incrementally-maintained MV behind q_mv_refresh: a lazily
-    * materialized base-partial snapshot (under /tmp, keyed by a
-    * content fingerprint of the source) merged with the post-split
-    * delta. Factored out so q_admin_check (operators/Wave9.scala) can
-    * cross-verify this DERIVED layout against its base table — the
-    * executor/admin.go index↔table consistency analog. */
-  /** The MV snapshot's on-disk location — ONE spelling shared with
-    * q_admin_recover, which corrupts/rebuilds this exact layout. */
-  def mvDir(t: Tables): String = {
-    val F = graft.sources.Formats
-    F.cacheDir(
-      s"/tmp/graft_mv_${F.sanitize(t.dir)}",
-      F.contentFingerprint(s"${t.dir}/orders.parquet"))
-  }
+    * materialized base-partial snapshot (built once per source
+    * fingerprint) merged with the post-split delta. The snapshot
+    * dir is ONE spelling shared with q_admin_check (which
+    * cross-verifies this DERIVED layout against its base table — the
+    * executor/admin.go index↔table consistency analog) and
+    * q_admin_recover / q_admin_cleanup, which corrupt and repair this
+    * exact layout. */
+  def mvDir(t: Tables): String =
+    Layouts.once(Layouts.root("mv", t.dir, s"${t.dir}/orders.parquet")) {
+      dir => mvPartial(t.orders.filter(col("o_orderdate") < mvSplit))
+        .write.mode("overwrite").parquet(dir)
+    }
 
   def mvMerged(t: Tables): org.apache.spark.sql.DataFrame = {
-    val split = "1997-01-01"
-    def partial(df: org.apache.spark.sql.DataFrame) =
-      df.groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("n_orders"),
-          sum(col("o_totalprice").cast("decimal(18,2)")).as("rev"))
-    val mvDir = Dml.mvDir(t)
-    if (!new java.io.File(s"$mvDir/_SUCCESS").exists())
-      partial(t.orders.filter(col("o_orderdate") < split))
-        .write.mode("overwrite").parquet(mvDir)
-    val mv = t.orders.sparkSession.read.parquet(mvDir)
-    val delta = partial(t.orders.filter(col("o_orderdate") >= split))
+    val mv = t.orders.sparkSession.read.parquet(mvDir(t))
+    val delta = mvPartial(t.orders.filter(col("o_orderdate") >= mvSplit))
     mv.union(delta)
       .groupBy("o_orderpriority")
       .agg(sum(col("n_orders")).as("n_orders"),

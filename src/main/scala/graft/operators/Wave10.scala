@@ -401,7 +401,7 @@ object Wave10 {
              CAST(o_orderkey >= 300 AS INT) AS post_evolution
       FROM orders WHERE o_orderkey < 600
     """)) { t =>
-      val dir = s"/tmp/graft_evo_${graft.sources.Formats.sanitize(t.dir)}"
+      val dir = graft.sources.Layouts.root("evo", t.dir)
       t.orders.filter(col("o_orderkey") < 300)
         .select(col("o_orderkey"), col("o_totalprice"))
         .write.mode("overwrite").parquet(s"$dir/gen=1")

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
+import graft.sources.Layouts
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -100,7 +101,7 @@ object Wave11 {
       val sel = t.lineitem.filter(col("l_orderkey") < 3000)
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
           col("l_extendedprice").cast("double").as("price"))
-      val base = s"/tmp/graft_compact_${graft.sources.Formats.sanitize(t.dir)}"
+      val base = Layouts.root("compact", t.dir)
       sel.repartition(32).write.mode("overwrite").parquet(s"$base/small")
       spark.read.parquet(s"$base/small")
         .repartition(2)
@@ -248,8 +249,7 @@ object Wave11 {
       val spark = t.spark
       val sel = t.customer.select(col("c_custkey"), col("c_name"),
         col("c_nationkey"), col("c_acctbal").cast("double").as("bal"))
-      val base =
-        s"/tmp/graft_mixfmt_${graft.sources.Formats.sanitize(t.dir)}"
+      val base = Layouts.root("mixfmt", t.dir)
       sel.filter(col("c_custkey") % 3 === 0)
         .write.mode("overwrite").parquet(s"$base/parquet")
       sel.filter(col("c_custkey") % 3 === 1)
@@ -284,8 +284,7 @@ object Wave11 {
       FROM orders WHERE YEAR(o_orderdate) = 1996
     """)) { t =>
       val spark = t.spark
-      val base =
-        s"/tmp/graft_dynover_${graft.sources.Formats.sanitize(t.dir)}"
+      val base = Layouts.root("dynover", t.dir)
       val sel = t.orders.select(col("o_orderkey"),
         year(col("o_orderdate")).cast("int").as("yr"),
         col("o_totalprice").cast("decimal(18,2)").as("price"))

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
-import graft.sources.{Formats, PartitionedFact}
+import graft.sources.{Formats, Layouts, PartitionedFact}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -22,16 +22,13 @@ object Wave12 {
     * the PartitionedFact pattern. */
   private def ordersWithStoredYear(t: Tables): DataFrame = {
     val src = s"${t.dir}/orders.parquet"
-    val dir = Formats.cacheDir(
-      s"/tmp/graft_gen_orders_${Formats.sanitize(t.dir)}",
-      Formats.contentFingerprint(src))
-    if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
+    t.spark.read.parquet(Layouts.once(
+        Layouts.root("gen_orders", t.dir, src)) { dir =>
       Formats.write(
         t.spark.read.parquet(src)
           .withColumn("o_year", year(col("o_orderdate"))),
         "parquet", dir)
-    }
-    t.spark.read.parquet(dir)
+    })
   }
 
   /** Avro ships INSIDE Spark 4's spark-sql jar but is not listed in
@@ -265,8 +262,7 @@ object Wave12 {
                AS prio_parts
       FROM orders WHERE o_orderkey < 5000
     """)) { t =>
-      val dir =
-        s"/tmp/graft_avro_${graft.sources.Formats.sanitize(t.dir)}"
+      val dir = Layouts.root("avro", t.dir)
       t.orders.filter(col("o_orderkey") < 5000)
         .select(col("o_orderkey"), col("o_orderstatus"),
           col("o_orderdate").as("o_ts"),
@@ -289,8 +285,7 @@ object Wave12 {
                AS o_price
       FROM orders WHERE o_orderkey < 2000
     """)) { t =>
-      val dir =
-        s"/tmp/graft_xml_${graft.sources.Formats.sanitize(t.dir)}"
+      val dir = Layouts.root("xml", t.dir)
       t.orders.filter(col("o_orderkey") < 2000)
         .select(col("o_orderkey"), col("o_orderstatus"),
           Exact.dec2(col("o_totalprice")).cast("double").as("o_price"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{Q, Tables}
 import graft.functions.{TextFns, UserVars}
+import graft.sources.{Formats, Layouts}
 import graft.tools.StatementsSummary
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -448,10 +449,7 @@ object Wave14 {
     // Wave14Spec proves re-read-equals-rotated and the slow-view
     // threshold fences.
     Q("q_slow_history", None) { t =>
-      val F = graft.sources.Formats
-      val dir = F.cacheDir(
-        s"/tmp/graft_stmthist_${F.sanitize(t.dir)}",
-        F.contentFingerprint(t.dir))
+      val dir = Layouts.root("stmthist", t.dir, t.dir)
       // Reset the entry's OWN history dir first: batch keys hash the
       // deterministic columns, so a CODE change that shifts a plan's
       // node counts would mint new keys while the old batches stay
@@ -459,7 +457,7 @@ object Wave14 {
       // stale windows in and exec_count would creep. Each run renders
       // exactly its own two rotations. (The spec proves cross-
       // rotation persistence semantics on an independent dir.)
-      F.deleteRecursively(new java.io.File(dir))
+      Formats.deleteRecursively(new java.io.File(dir))
       StatementsSummary.clear()
       StatementsSummary.record("q_scan_filter", t)
       StatementsSummary.record("q_scan_filter", t)

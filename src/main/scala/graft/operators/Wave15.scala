@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
+import graft.sources.{Formats, Layouts}
 import graft.tools.Acl
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -86,13 +87,10 @@ object Wave15 {
     // fold of the raw batch files and pins the deterministic
     // exec-count series per window.
     Q("q_metrics_schema", None) { t =>
-      val F = graft.sources.Formats
-      val dir = F.cacheDir(
-        s"/tmp/graft_metrics_${F.sanitize(t.dir)}",
-        F.contentFingerprint(t.dir))
+      val dir = Layouts.root("metrics", t.dir, t.dir)
       // Own-dir reset, same reasoning as q_slow_history: stale
       // batches from a previous CODE version would fold in.
-      F.deleteRecursively(new java.io.File(dir))
+      Formats.deleteRecursively(new java.io.File(dir))
       graft.tools.StatementsSummary.clear()
       graft.tools.StatementsSummary.record("q_scan_filter", t)
       graft.tools.StatementsSummary.record("q_scan_filter", t)
@@ -202,9 +200,8 @@ object Wave15 {
              CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS o_price
       FROM orders WHERE o_orderkey % 7 = 0
     """)) { t =>
-      val F = graft.sources.Formats
-      val root = s"/tmp/graft_flashback_${F.sanitize(t.dir)}"
-      F.deleteRecursively(new java.io.File(root))
+      val root = Layouts.root("flashback", t.dir)
+      Formats.deleteRecursively(new java.io.File(root))
       val tableDir = s"$root/fb_orders"
       val binDir = s"$root/bin"
       t.orders.filter(col("o_orderkey") % 7 === 0)
@@ -377,9 +374,8 @@ object Wave15 {
                   + CAST(0.07 AS DECIMAL(18,2)) AS DOUBLE) AS price
       FROM orders WHERE YEAR(o_orderdate) = 1996
     """)) { t =>
-      val F = graft.sources.Formats
-      val root = s"/tmp/graft_exchg_${F.sanitize(t.dir)}"
-      F.deleteRecursively(new java.io.File(root))
+      val root = Layouts.root("exchg", t.dir)
+      Formats.deleteRecursively(new java.io.File(root))
       val base = s"$root/fact"
       val stage = s"$root/stage"
       val sel = t.orders.select(col("o_orderkey"),
@@ -419,9 +415,8 @@ object Wave15 {
       FROM events
       WHERE ts >= (SELECT MAX(ts) - INTERVAL 120 HOUR FROM events)
     """)) { t =>
-      val F = graft.sources.Formats
-      val root = s"/tmp/graft_ttl_${F.sanitize(t.dir)}"
-      F.deleteRecursively(new java.io.File(root))
+      val root = Layouts.root("ttl", t.dir)
+      Formats.deleteRecursively(new java.io.File(root))
       t.events.select(col("event_id"), col("user_id"), col("value"),
           col("ts"), date_format(col("ts"), "yyyy-MM-dd").as("day"))
         .write.partitionBy("day").parquet(root)
@@ -466,7 +461,7 @@ object Wave15 {
         val loc = new java.io.File(
           spark.conf.get("spark.sql.warehouse.dir")
             .stripPrefix("file:"), "ls_customer")
-        if (loc.exists()) graft.sources.Formats.deleteRecursively(loc)
+        if (loc.exists()) Formats.deleteRecursively(loc)
       }
       reset()
       t.customer.write.saveAsTable("ls_customer")

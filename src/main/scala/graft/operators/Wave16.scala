@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
+import graft.sources.{Formats, Layouts}
 import graft.tools.Acl
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -68,11 +69,11 @@ object Wave16 {
              CAST(o_orderkey >= 300 AS INT) AS gen2
       FROM orders WHERE o_orderkey < 600
     """)) { t =>
-      val dir = s"/tmp/graft_widen_${graft.sources.Formats.sanitize(t.dir)}"
+      val dir = Layouts.root("widen", t.dir)
       // Reset the whole layout root first: the widened read scans the
       // ROOT, so a stale subdirectory from an older code version
       // would silently fold into the hashed result otherwise.
-      graft.sources.Formats.deleteRecursively(new java.io.File(dir))
+      Formats.deleteRecursively(new java.io.File(dir))
       t.orders.filter(col("o_orderkey") < 300)
         .select(col("o_orderkey"), col("o_custkey").cast("int").as("val"))
         .write.mode("overwrite").parquet(s"$dir/gen=1")
@@ -233,9 +234,8 @@ object Wave16 {
              CAST(0 AS BIGINT), 'synced'
     """)) { t =>
       import t.spark.implicits._
-      val F = graft.sources.Formats
-      val root = s"/tmp/graft_ddljobs_${F.sanitize(t.dir)}"
-      F.deleteRecursively(new java.io.File(root))
+      val root = Layouts.root("ddljobs", t.dir)
+      Formats.deleteRecursively(new java.io.File(root))
       graft.tools.DdlJournal.clear()
       def slice(lo: Int, hi: Int) = t.orders
         .filter(col("o_orderkey") >= lo && col("o_orderkey") < hi)
@@ -304,12 +304,9 @@ object Wave16 {
         AND substring(o_orderpriority, 1, 1) = '1'
       GROUP BY 1
     """)) { t =>
-      val F = graft.sources.Formats
-      val dir = F.cacheDir(
-        s"/tmp/graft_rc_orders_${F.sanitize(t.dir)}",
-        F.contentFingerprint(s"${t.dir}/orders.parquet"))
-      if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
-        F.write(
+      val dir = Layouts.once(Layouts.root("rc_orders", t.dir,
+          s"${t.dir}/orders.parquet")) { dir =>
+        Formats.write(
           t.orders
             .withColumn("yr", year(col("o_orderdate")))
             .withColumn("pclass",

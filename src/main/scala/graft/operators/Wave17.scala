@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
+import graft.sources.{Formats, Layouts}
 import graft.tools.Acl
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -195,18 +196,11 @@ object Wave17 {
       def children(dir: String, prefix: String): Int =
         Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
           .count(_.getName.startsWith(prefix))
-      // Ensure every rendered layout exists (all lazily built, all
-      // fingerprint-cached — free after first touch).
+      // Every rendered layout is read through its builder (all
+      // lazily built once, fingerprint-keyed — free after first
+      // touch).
       B.ordersCustomerBucketed(t.spark, t.dir)
-      P.lineitemByShipMonth(t.spark, t.dir)
-      P.ordersByCustHash(t.spark, t.dir)
-      P.ordersByPriorityList(t.spark, t.dir)
-      val ivfDir = graft.ann.IvfIndex.sharedCacheDir(t.dir, 16, 2)
-      if (!new java.io.File(s"$ivfDir/centroids/_SUCCESS").exists())
-        graft.ann.IvfIndex.writeIndex(
-          t.fan(t.embeddings).select(col("vec_id"),
-            graft.functions.VectorFns.toDouble(col("embedding")).as("v")),
-          ivfDir, c = 16, iters = 2)
+      val ivfDir = graft.ann.IvfIndex.sharedIndex(t)
       val zDir = eventsZOrderDir(t)
       val (oTbl, cTbl) = B.pairTableNames(t.dir)
       val wh = new java.io.File(java.net.URI.create(
@@ -224,12 +218,12 @@ object Wave17 {
         ("graft_b_orders", "bucket", "BUCKETED SORTED", "o_custkey",
           children(s"$wh/$oTbl", "part-")),
         ("lineitem_shipmonth", "range", "RANGE COLUMNS", "shipmonth",
-          children(P.lineitemShipMonthDir(t.dir), "shipmonth=")),
+          children(P.lineitemShipMonthDir(t.spark, t.dir), "shipmonth=")),
         ("orders_custhash", "hash", "HASH", "o_custkey",
-          children(P.ordersCustHashDir(t.dir), "pbucket=")),
+          children(P.ordersCustHashDir(t.spark, t.dir), "pbucket=")),
         ("orders_prioritylist", "list", "LIST COLUMNS",
           "o_orderpriority",
-          children(P.ordersPriorityListDir(t.dir), "plist=")))
+          children(P.ordersPriorityListDir(t.spark, t.dir), "plist=")))
         .toDF("table_name", "key_name", "index_type", "key_cols",
           "n_partitions")
     },
@@ -256,7 +250,6 @@ object Wave17 {
              TRUE AS consistent
       FROM orders GROUP BY o_orderpriority
     """)) { t =>
-      val F = graft.sources.Formats
       def base = t.orders
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n_orders"),
@@ -264,8 +257,7 @@ object Wave17 {
             .as("revenue"))
       def checked = AdminCheck.check(base, Dml.mvMerged(t),
         Seq("o_orderpriority"))
-      val dir = Dml.mvDir(t)
-      Dml.mvMerged(t) // ensure the snapshot exists before corrupting
+      val dir = Dml.mvDir(t) // built before it is corrupted
       // Materialize the snapshot BEFORE overwriting its own files.
       val snap = t.spark.read.parquet(dir).localCheckpoint()
       // From the corrupt write onward, ANY failure must not strand
@@ -286,7 +278,7 @@ object Wave17 {
         // RECOVER: drop the corrupt derived layout (on success AND on
         // failure), rebuild from base through the SAME
         // lazily-maintained MV path, re-verify.
-        F.deleteRecursively(new java.io.File(dir))
+        Formats.deleteRecursively(new java.io.File(dir))
       }
       checked
     },
@@ -323,8 +315,7 @@ object Wave17 {
             .as("revenue"))
       def checked = AdminCheck.check(base, Dml.mvMerged(t),
         Seq("o_orderpriority"))
-      val dir = Dml.mvDir(t)
-      Dml.mvMerged(t) // ensure the snapshot exists before corrupting
+      val dir = Dml.mvDir(t) // built before it is corrupted
       val snap = t.spark.read.parquet(dir).localCheckpoint()
       // Dangling entries: keys no base row produces (phantom
       // priorities). Values are arbitrary non-null — cleanup must
@@ -353,7 +344,7 @@ object Wave17 {
         cleaned.write.mode("overwrite").parquet(dir)
       } catch {
         case e: Throwable =>
-          graft.sources.Formats.deleteRecursively(new java.io.File(dir))
+          Formats.deleteRecursively(new java.io.File(dir))
           throw e
       }
       checked
@@ -384,13 +375,13 @@ object Wave17 {
     """)) { t =>
       val root = partitionMgmtLayout(t)
       // DROP PARTITION oyear=1996: definition and data both go.
-      graft.sources.Formats.deleteRecursively(
+      Formats.deleteRecursively(
         new java.io.File(s"$root/oyear=1996"))
       // TRUNCATE PARTITION oyear=1998: the partition survives empty —
       // only its data files are replaced (with nothing).
       val p95 = new java.io.File(s"$root/oyear=1998")
       Option(p95.listFiles()).getOrElse(Array.empty).foreach(f =>
-        graft.sources.Formats.deleteRecursively(f))
+        Formats.deleteRecursively(f))
       t.spark.read.parquet(root)
         .groupBy(col("oyear").cast("long").as("oyear"))
         .agg(count(lit(1)).as("n_orders"),
@@ -405,9 +396,8 @@ object Wave17 {
     * One file per partition: the partition column is the shuffle
     * key, so the write is one exchange. */
   private def partitionMgmtLayout(t: Tables): String = {
-    val F = graft.sources.Formats
-    val root = s"/tmp/graft_partmgmt_${F.sanitize(t.dir)}"
-    F.deleteRecursively(new java.io.File(root))
+    val root = Layouts.root("partmgmt", t.dir)
+    Formats.deleteRecursively(new java.io.File(root))
     t.orders
       .withColumn("oyear", year(col("o_orderdate")))
       .repartition(col("oyear"))
@@ -422,12 +412,9 @@ object Wave17 {
     * bounds fold to one 1-row aggregate (bounded driver scalars, the
     * convergence-scalar discipline). */
   private[operators] def eventsZOrderDir(t: Tables): String = {
-    val F = graft.sources.Formats
     val Z = graft.sources.ZOrder
-    val dir = F.cacheDir(
-      s"/tmp/graft_zorder_events_${F.sanitize(t.dir)}",
-      F.contentFingerprint(s"${t.dir}/events.parquet"))
-    if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
+    Layouts.once(Layouts.root("zorder_events", t.dir,
+        s"${t.dir}/events.parquet")) { dir =>
       val r = t.events.agg(max(col("event_id")),
         min(unix_timestamp(col("ts"))), max(unix_timestamp(col("ts"))))
         .head()
@@ -438,6 +425,5 @@ object Wave17 {
           math.max(t1 - t0, 1L)),
         dir, nFiles = 8)
     }
-    dir
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
+import graft.sources.{Formats, Layouts}
 import graft.tools.Acl
 import org.apache.spark.sql.functions._
 
@@ -196,7 +197,6 @@ object Wave18 {
       UNION ALL SELECT '2_after_rollback', * FROM base
       UNION ALL SELECT '3_after_commit', * FROM m
     """)) { t =>
-      val F = graft.sources.Formats
       val b = t.orders.select(col("o_orderkey"), col("o_orderstatus"),
         Exact.dec2(col("o_totalprice")).as("p"))
       // The transaction's buffered mutations.
@@ -223,8 +223,8 @@ object Wave18 {
             col("cnt"), col("total"))
       // COMMIT: the merged state becomes the next persisted snapshot
       // — written, then read BACK from disk for its section.
-      val dir = s"/tmp/graft_txn_${F.sanitize(t.dir)}"
-      F.deleteRecursively(new java.io.File(dir))
+      val dir = Layouts.root("txn", t.dir)
+      Formats.deleteRecursively(new java.io.File(dir))
       merged.write.mode("overwrite").parquet(dir)
       val committed = t.spark.read.parquet(dir)
       agg(merged, "1_in_txn")
@@ -387,7 +387,6 @@ object Wave18 {
              COALESCE(CAST(bal AS VARCHAR), '\N') AS line
       FROM src
     """)) { t =>
-      val F = graft.sources.Formats
       val nm = concat(col("c_name"),
         when(col("c_custkey") % 4 === 0, ";x")
           .when(col("c_custkey") % 4 === 1, "\"q")
@@ -407,8 +406,8 @@ object Wave18 {
       val out = t.customer.filter(col("c_custkey") < 400)
         .select(col("c_custkey"), line)
       // The OUTFILE itself: each row + the '\n' line terminator.
-      val dir = s"/tmp/graft_outfile_${F.sanitize(t.dir)}"
-      F.deleteRecursively(new java.io.File(dir))
+      val dir = Layouts.root("outfile", t.dir)
+      Formats.deleteRecursively(new java.io.File(dir))
       out.select(col("line")).write.mode("overwrite").text(dir)
       out
     },

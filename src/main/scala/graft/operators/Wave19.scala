@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
+import graft.sources.{Formats, Layouts}
 import graft.tools.{Acl, SessionManager}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -726,7 +727,6 @@ object Wave19 {
              END AS bal
       FROM customer WHERE c_custkey < 500
     """)) { t =>
-      val F = graft.sources.Formats
       val nm = concat(col("c_name"),
         when(col("c_custkey") % 4 === 0, ";x")
           .when(col("c_custkey") % 4 === 1, "\"q")
@@ -737,8 +737,8 @@ object Wave19 {
       val line = concat(col("c_custkey").cast("string"), lit(";"),
         lit("\""), Outfile.escEnclosed(nm), lit("\""), lit(";"),
         coalesce(bal.cast("string"), lit("\\N")))
-      val dir = s"/tmp/graft_loadfile_${F.sanitize(t.dir)}"
-      F.deleteRecursively(new java.io.File(dir))
+      val dir = Layouts.root("loadfile", t.dir)
+      Formats.deleteRecursively(new java.io.File(dir))
       t.customer.filter(col("c_custkey") < 500)
         .select(line.as("line"))
         .write.mode("overwrite").text(dir)
@@ -912,14 +912,7 @@ object Wave19 {
       SELECT 'BACKUP', 'local', 'running', CAST(0 AS BIGINT), 0
     """)) { t =>
       import t.spark.implicits._
-      val F = graft.sources.Formats
       val bdir = Backup.dir(t)
-      if (!new java.io.File(s"$bdir/manifest/_SUCCESS").exists()) {
-        val snapshot = t.orders.select(col("o_orderkey"),
-          col("o_custkey"), col("o_orderstatus"),
-          Exact.dec2(col("o_totalprice")).cast("double").as("o_price"))
-        Backup.write(snapshot, bdir)
-      }
       val manifest = t.spark.read.parquet(s"$bdir/manifest").head()
       val restored = Backup.restore(t.spark, bdir).count()
       // An in-flight backup: data landing, manifest not yet written.
@@ -927,8 +920,8 @@ object Wave19 {
       // state is this run's own, so a regenerated dataset can never
       // serve stale staged data, and no defensive manifest-done
       // branch exists to mis-render against the pinned oracle.
-      val staging = s"/tmp/graft_backup_running_${F.sanitize(t.dir)}"
-      F.deleteRecursively(new java.io.File(staging))
+      val staging = Layouts.root("backup_running", t.dir)
+      Formats.deleteRecursively(new java.io.File(staging))
       t.orders.filter(col("o_orderkey") < 100)
         .select("o_orderkey").write.parquet(s"$staging/data")
       Seq(

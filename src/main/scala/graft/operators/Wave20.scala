@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
+import graft.sources.{Formats, Layouts}
 import org.apache.spark.sql.functions._
 
 /** Round-15 second batch: table-level locks and table renames — the
@@ -13,7 +14,7 @@ object Wave20 {
     * mutate the layout, so the entry rebuilds its fixtures instead
     * of trusting a previous run's moved directories). */
   private def renameRoot(t: Tables): String =
-    s"/tmp/graft_rename_${graft.sources.Formats.sanitize(t.dir)}"
+    Layouts.root("rename", t.dir)
 
   val all: Seq[Q] = Seq(
 
@@ -88,9 +89,8 @@ object Wave20 {
              (SELECT CAST(SUM(p) AS DOUBLE) FROM a)
     """)) { t =>
       import t.spark.implicits._
-      val F = graft.sources.Formats
       val root = renameRoot(t)
-      F.deleteRecursively(new java.io.File(root))
+      Formats.deleteRecursively(new java.io.File(root))
       def seed(name: String, pred: org.apache.spark.sql.Column): Unit =
         t.orders.filter(pred)
           .select(col("o_orderkey"),

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
+import graft.sources.{Formats, Layouts}
 import org.apache.spark.sql.functions._
 
 /** Round-16 wave: the placement-policy DDL lifecycle, whole-table
@@ -15,7 +16,7 @@ object Wave21 {
     * the layout, so the entry rebuilds its fixtures per run — the
     * q_rename_table discipline). */
   private def truncRoot(t: Tables): String =
-    s"/tmp/graft_truncate_${graft.sources.Formats.sanitize(t.dir)}"
+    Layouts.root("truncate", t.dir)
 
   /** ONE spelling of the extended-stats oracle algebra — shared by
     * q_stats_extended and q_stats_lifecycle so the two cards cannot
@@ -204,9 +205,8 @@ object Wave21 {
       FROM s
     """)) { t =>
       import t.spark.implicits._
-      val F = graft.sources.Formats
       val root = truncRoot(t)
-      F.deleteRecursively(new java.io.File(root))
+      Formats.deleteRecursively(new java.io.File(root))
       val tableDir = s"$root/trunc_orders"
       val binDir = s"$root/bin"
       val seed = t.orders.filter(col("o_orderkey") % 9 === 0)

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
-import graft.sources.Formats
+import graft.sources.Layouts
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -31,20 +31,11 @@ object Wave6 {
     * the table's snapshot/retention store. Reading version k scans
     * ONLY that version's directory — bounded, partition-pruned, no
     * log replay at read time. */
-  def timeTravelStore(t: Tables): String = {
-    val fp = Formats.contentFingerprint(s"${t.dir}/events.parquet") +
-      Formats.contentFingerprint(s"${t.dir}/orders.parquet")
-    val dir = Formats.cacheDir(
-      s"/tmp/graft_timetravel_${Formats.sanitize(t.dir)}", fp)
-    if (!new java.io.File(s"$dir/_DONE").exists()) {
+  def timeTravelStore(t: Tables): String =
+    Layouts.once(Layouts.root("timetravel", t.dir,
+        s"${t.dir}/events.parquet", s"${t.dir}/orders.parquet")) { build =>
       val spark = t.orders.sparkSession
       import spark.implicits._
-      // Build into a builder-private temp dir renamed into place at
-      // the end: a crashed builder never leaves a half-written store
-      // behind the fingerprint key, and of two concurrent builders
-      // one atomic rename wins while the loser just discards.
-      val build = new java.io.File(
-        s"$dir.build-${ProcessHandle.current().pid()}")
       // O(1) driver scalar (like the graph convergence checks): the
       // max change sequence fixes the batch cutoffs. An empty events
       // table (null max) means no change batches — every version is
@@ -73,17 +64,7 @@ object Wave6 {
       }
       meta.result().toDF("version", "cutoff", "commit_ts_us")
         .coalesce(1).write.mode("overwrite").parquet(s"$build/_meta")
-      new java.io.File(s"$build/_DONE").createNewFile()
-      if (!build.renameTo(new java.io.File(dir))) {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete(); ()
-        }
-        rm(build)
-      }
     }
-    dir
-  }
 
   val all: Seq[Q] = Seq(
 

@@ -8,7 +8,7 @@ object Wave7 {
 
   /** Export dialect — mirrors the reference's FIELDS/LINES clauses. */
   def exportDir(t: Tables): String =
-    s"/tmp/graft_export_${graft.sources.Formats.sanitize(t.dir)}"
+    graft.sources.Layouts.root("export", t.dir)
 
   val all: Seq[Q] = Seq(
 

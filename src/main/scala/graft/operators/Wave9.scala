@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
+import graft.sources.Layouts
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -170,8 +171,7 @@ object Wave9 {
              c_custkey % 7 AS tag1
       FROM customer WHERE c_custkey < 500
     """)) { t =>
-      val dir =
-        s"/tmp/graft_json_${graft.sources.Formats.sanitize(t.dir)}"
+      val dir = Layouts.root("json", t.dir)
       t.customer.filter(col("c_custkey") < 500)
         .select(col("c_custkey"),
           struct(col("c_name").as("name"), col("c_acctbal").as("bal"))
@@ -201,8 +201,7 @@ object Wave9 {
              CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS o_price
       FROM orders WHERE o_orderkey < 5000
     """)) { t =>
-      val dir =
-        s"/tmp/graft_orc_${graft.sources.Formats.sanitize(t.dir)}"
+      val dir = Layouts.root("orc", t.dir)
       t.orders.filter(col("o_orderkey") < 5000)
         .select(col("o_orderkey"), col("o_orderstatus"),
           col("o_orderdate").cast("date").as("o_date"),
@@ -227,13 +226,7 @@ object Wave9 {
              CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS o_price
       FROM orders
     """)) { t =>
-      val snapshot = t.orders.select(col("o_orderkey"), col("o_custkey"),
-        col("o_orderstatus"),
-        Exact.dec2(col("o_totalprice")).cast("double").as("o_price"))
-      val bdir = Backup.dir(t)
-      if (!new java.io.File(s"$bdir/manifest/_SUCCESS").exists())
-        Backup.write(snapshot, bdir)
-      Backup.restore(t.spark, bdir)
+      Backup.restore(t.spark, Backup.dir(t))
     },
   )
 }
@@ -243,16 +236,17 @@ object Wave9 {
 object Backup {
   import org.apache.spark.sql.SparkSession
 
-  /** The backup layout root for a warehouse — ONE spelling shared by
-    * q_backup_restore (which builds it) and q_show_backups (which
-    * renders the BRIE queue from it), keyed by the source's content
-    * fingerprint so a data regen invalidates it. */
-  def dir(t: graft.Tables): String = {
-    val F = graft.sources.Formats
-    F.cacheDir(
-      s"/tmp/graft_backup_${F.sanitize(t.dir)}",
-      F.contentFingerprint(s"${t.dir}/orders.parquet"))
-  }
+  /** The backup of a warehouse's orders snapshot, written once and
+    * returned as its dir — ONE spelling shared by q_backup_restore
+    * and q_show_backups (which renders the BRIE queue from it), keyed
+    * by the source's content fingerprint so a data regen
+    * invalidates it. */
+  def dir(t: graft.Tables): String =
+    Layouts.once(Layouts.root("backup", t.dir, s"${t.dir}/orders.parquet")) {
+      write(t.orders.select(col("o_orderkey"), col("o_custkey"),
+        col("o_orderstatus"),
+        Exact.dec2(col("o_totalprice")).cast("double").as("o_price")), _)
+    }
 
   /** Order-independent digest of a DataFrame: (row count, BIT_XOR of
     * a per-row 60-bit md5 over all columns' string renderings). NULL

@@ -51,8 +51,8 @@ object Formats {
     spark.read.text(path)
 
   /** 8-byte hex content fingerprint of a local file or directory
-    * (absolute path + leaf names/sizes/mtimes). Keys /tmp caches of
-    * derived layouts (partitioned copies, ANN indexes) so regenerated
+    * (absolute path + leaf names/sizes/mtimes). Keys derived layouts
+    * ([[Layouts.root]]) and bucketed tables so regenerated
     * source data — or two paths whose String.hashCode collides — get
     * distinct cache dirs instead of silently serving stale derived
     * state. */
@@ -66,31 +66,10 @@ object Formats {
       .take(8).map("%02x".format(_)).mkString
   }
 
-  /** Path component safe for embedding a source path in a cache dir
-    * name. The DATA IDENTITY (source dir, build params) belongs in
-    * the cacheDir PREFIX — only the content fingerprint goes in the
-    * suffix — so eviction never touches caches of other datasets. */
+  /** Path component safe for embedding a source path in a layout
+    * root name (see [[Layouts.root]]). */
   def sanitize(path: String): String =
     path.replaceAll("[^A-Za-z0-9.]+", "-").stripPrefix("-")
-
-  /** Cache directory `<prefix>_<fp>` for a fingerprint-keyed derived
-    * layout, evicting STALE siblings first: without this, every
-    * source-data regeneration leaves behind a full previous copy
-    * (`<prefix>_<oldfp>`) and iterating on data generation steadily
-    * fills /tmp. Anything that isn't a `<prefix>_*` sibling — e.g. a
-    * same-prefix-different-params or different-dataset cache — is
-    * untouched because those belong in the prefix (see sanitize). */
-  def cacheDir(prefix: String, fp: String): String = {
-    val p = new java.io.File(prefix)
-    val (base, stem) = (p.getParentFile, p.getName)
-    if (base != null && base.isDirectory) {
-      Option(base.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.getName.startsWith(stem + "_") &&
-          f.getName != s"${stem}_$fp")
-        .foreach(deleteRecursively)
-    }
-    s"${prefix}_$fp"
-  }
 
   /** Parquet read that degrades to `empty` on EXACTLY the two
     * analysis-time absent-layout conditions (missing path, dir with
@@ -109,7 +88,7 @@ object Formats {
             e.getCondition == "UNABLE_TO_INFER_SCHEMA" => empty
     }
 
-  /** Recursive local delete (cache-dir eviction). */
+  /** Recursive local delete. */
   def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory)
       Option(f.listFiles()).foreach(_.foreach(deleteRecursively))

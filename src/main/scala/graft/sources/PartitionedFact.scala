@@ -28,36 +28,24 @@ import org.apache.spark.sql.functions._
 object PartitionedFact {
 
   /** Ship-month-partitioned lineitem (partition column `shipmonth` =
-    * 'yyyy-MM' of l_shipdate). Lazily written once per source-data
-    * fingerprint; returns the partition-aware reader. */
-  /** The ONE spelling of each layout's on-disk location — shared by
-    * the builders below and the index-metadata card (q_show_index),
-    * which derives its partition counts by LISTING these
-    * directories. */
-  def lineitemShipMonthDir(dataDir: String): String = Formats.cacheDir(
-    s"/tmp/graft_part_lineitem_${Formats.sanitize(dataDir)}",
-    Formats.contentFingerprint(s"$dataDir/lineitem.parquet"))
-
-  def ordersCustHashDir(dataDir: String): String = Formats.cacheDir(
-    s"/tmp/graft_hash_orders_${Formats.sanitize(dataDir)}",
-    Formats.contentFingerprint(s"$dataDir/orders.parquet"))
-
-  def ordersPriorityListDir(dataDir: String): String = Formats.cacheDir(
-    s"/tmp/graft_list_orders_${Formats.sanitize(dataDir)}",
-    Formats.contentFingerprint(s"$dataDir/orders.parquet"))
-
-  def lineitemByShipMonth(spark: SparkSession, dataDir: String): DataFrame = {
+    * 'yyyy-MM' of l_shipdate), built once per source fingerprint.
+    * Each `*Dir` function is the ONE spelling of its layout: it
+    * builds on first touch and returns the location, so the readers
+    * below and the index-metadata card (q_show_index, which lists
+    * these directories for its partition counts) cannot disagree. */
+  def lineitemShipMonthDir(spark: SparkSession, dataDir: String): String = {
     val src = s"$dataDir/lineitem.parquet"
-    val dir = lineitemShipMonthDir(dataDir)
-    if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
+    Layouts.once(Layouts.root("part_lineitem", dataDir, src)) { dir =>
       Formats.write(
         spark.read.parquet(src)
           .withColumn("shipmonth",
             date_format(col("l_shipdate"), "yyyy-MM")),
         "parquet", dir, partitionBy = Seq("shipmonth"))
     }
-    spark.read.parquet(dir)
   }
+
+  def lineitemByShipMonth(spark: SparkSession, dataDir: String): DataFrame =
+    spark.read.parquet(lineitemShipMonthDir(spark, dataDir))
 
   /** Number of hash partitions for [[ordersByCustHash]] — the `n` of
     * `PARTITION BY HASH(o_custkey) PARTITIONS n`. */
@@ -73,17 +61,18 @@ object PartitionedFact {
     * [[custkeyPruned]] here: callers state the KEY predicate and the
     * reader adds the derived bucket predicate, which Catalyst turns
     * into PartitionFilters (static directory pruning). */
-  def ordersByCustHash(spark: SparkSession, dataDir: String): DataFrame = {
+  def ordersCustHashDir(spark: SparkSession, dataDir: String): String = {
     val src = s"$dataDir/orders.parquet"
-    val dir = ordersCustHashDir(dataDir)
-    if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
+    Layouts.once(Layouts.root("hash_orders", dataDir, src)) { dir =>
       Formats.write(
         spark.read.parquet(src)
           .withColumn("pbucket", pmod(col("o_custkey"), lit(HashBuckets))),
         "parquet", dir, partitionBy = Seq("pbucket"))
     }
-    spark.read.parquet(dir)
   }
+
+  def ordersByCustHash(spark: SparkSession, dataDir: String): DataFrame =
+    spark.read.parquet(ordersCustHashDir(spark, dataDir))
 
   /** The hash-prune rewrite: an IN/point predicate on the partition
     * KEY gains the implied predicate on the partition BUCKET, so the
@@ -109,10 +98,9 @@ object PartitionedFact {
     * explicit value list; a predicate on the list column locates the
     * partitions whose lists intersect it). Directory column `plist`
     * is the named partition of the row's o_orderpriority. */
-  def ordersByPriorityList(spark: SparkSession, dataDir: String): DataFrame = {
+  def ordersPriorityListDir(spark: SparkSession, dataDir: String): String = {
     val src = s"$dataDir/orders.parquet"
-    val dir = ordersPriorityListDir(dataDir)
-    if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
+    Layouts.once(Layouts.root("list_orders", dataDir, src)) { dir =>
       val plist = PriorityLists.foldLeft(lit(null).cast("string")) {
         case (acc, (v, p)) =>
           when(col("o_orderpriority") === v, p).otherwise(acc)
@@ -121,8 +109,10 @@ object PartitionedFact {
         spark.read.parquet(src).withColumn("plist", plist),
         "parquet", dir, partitionBy = Seq("plist"))
     }
-    spark.read.parquet(dir)
   }
+
+  def ordersByPriorityList(spark: SparkSession, dataDir: String): DataFrame =
+    spark.read.parquet(ordersPriorityListDir(spark, dataDir))
 
   /** The list-prune rewrite (locatePartitionByColumn): a value
     * predicate on the list column locates exactly the named

@@ -27,4 +27,10 @@ object GraftSqlShim {
     * stats artifact without re-running ANALYZE. */
   def sessionCatalog(spark: SparkSession): catalyst.catalog.SessionCatalog =
     spark.asInstanceOf[classic.SparkSession].sessionState.catalog
+
+  /** Block until the driver's (`private[spark]`) listener bus has
+    * delivered every posted event, so listener counters read after
+    * it are complete — a fixed sleep races on a loaded host. */
+  def drainListenerBus(spark: SparkSession, timeoutMs: Long = 60000L): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs)
 }

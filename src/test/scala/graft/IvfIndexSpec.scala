@@ -121,6 +121,13 @@ class IvfIndexSpec extends SparkSpecBase {
     // (a 20% slice of the same distribution) most cells must NOT
     // demand a retrain — the signal has a quiet zero state.
     assert(card.count(_.getAs[Int]("retrain") == 0) > card.length / 2)
+    // vec_id contract: an append never deduplicates. An id already
+    // indexed, appended again in a batch that repeats it, lands as two
+    // more rows.
+    val again = corpus.filter(col("vec_id") === 5)
+    IvfIndex.appendToIndex(spark, rootA, again.union(again))
+    assert(spark.read.parquet(s"$rootA/cells")
+      .filter(col("vec_id") === 5).count() == 3)
   }
 
   test("retrain-and-swap: drifted append flags red; the swap is a " +

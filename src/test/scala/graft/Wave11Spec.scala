@@ -336,7 +336,7 @@ class Wave11Spec extends SparkSpecBase {
     val rows = q("q_compact")
     assert(rows.count() ==
       t.lineitem.filter(col("l_orderkey") < 3000).count())
-    val base = s"/tmp/graft_compact_${sources.Formats.sanitize(t.dir)}"
+    val base = sources.Layouts.root("compact", t.dir)
     def parquetFiles(d: String) =
       new java.io.File(d).listFiles().count(_.getName.endsWith(".parquet"))
     assert(parquetFiles(s"$base/small") == 32)
@@ -412,7 +412,7 @@ class Wave11Spec extends SparkSpecBase {
     assert(rows.length == t.customer.count())
     assert(rows.map(_.getAs[Long]("c_custkey")).distinct.length ==
       rows.length)
-    val base = s"/tmp/graft_mixfmt_${sources.Formats.sanitize(t.dir)}"
+    val base = sources.Layouts.root("mixfmt", t.dir)
     Seq("parquet", "orc", "csv").foreach { f =>
       assert(new java.io.File(s"$base/$f").exists())
     }

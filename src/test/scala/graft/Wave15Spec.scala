@@ -342,8 +342,7 @@ class Wave15Spec extends SparkSpecBase {
 
   test("Ttl.sweep drops whole days, rewrites only the boundary day") {
     val rows = q("q_ttl").collect()
-    val F = graft.sources.Formats
-    val root = s"/tmp/graft_ttl_${F.sanitize(t.dir)}"
+    val root = graft.sources.Layouts.root("ttl", t.dir)
     // Re-derive the watermark the entry used.
     val wm = t.events
       .agg((max(col("ts")) - expr("INTERVAL 120 HOURS")).as("wm"))
@@ -419,8 +418,7 @@ class Wave15Spec extends SparkSpecBase {
 
   test("q_exchange_partition displaces the old partition into the stage") {
     q("q_exchange_partition").collect()
-    val F = graft.sources.Formats
-    val root = s"/tmp/graft_exchg_${F.sanitize(t.dir)}"
+    val root = graft.sources.Layouts.root("exchg", t.dir)
     // The swap's other direction: the stage dir now holds the
     // ORIGINAL (uncorrected) 1996 partition.
     val displaced = spark.read.parquet(s"$root/stage")

@@ -64,7 +64,7 @@ class Wave16Spec extends SparkSpecBase {
     // Entry run writes the two generations (gen 1 INT32, gen 2 INT64).
     Registry.byName("q_modify_column").run(t)
       .write.format("noop").mode("overwrite").save()
-    val dir = s"/tmp/graft_widen_${graft.sources.Formats.sanitize(t.dir)}"
+    val dir = graft.sources.Layouts.root("widen", t.dir)
     // Generation 1 is NARROW on disk...
     val gen1Raw = spark.read.parquet(s"$dir/gen=1")
     assert(gen1Raw.schema("val").dataType ==
@@ -189,7 +189,7 @@ class Wave16Spec extends SparkSpecBase {
     assert(rows(4).getString(3) == "drop table" && rows(4).getLong(5) == 0L)
     // The drop retained the displaced partition in the bin (unlink,
     // not erase).
-    val root = s"/tmp/graft_ddljobs_${graft.sources.Formats.sanitize(t.dir)}"
+    val root = graft.sources.Layouts.root("ddljobs", t.dir)
     val binEntries = new java.io.File(s"$root/bin").listFiles()
     assert(binEntries != null && binEntries.nonEmpty)
   }

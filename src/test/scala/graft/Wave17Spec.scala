@@ -184,8 +184,7 @@ class Wave17Spec extends SparkSpecBase {
   test("q_partition_mgmt: DROP removes the partition directory, " +
     "TRUNCATE leaves it present but empty, survivors keep their rows") {
     val res = q("q_partition_mgmt").collect()
-    val root = s"/tmp/graft_partmgmt_" +
-      graft.sources.Formats.sanitize(t.dir)
+    val root = graft.sources.Layouts.root("partmgmt", t.dir)
     assert(!new java.io.File(s"$root/oyear=1996").exists())
     val p95 = new java.io.File(s"$root/oyear=1998")
     assert(p95.isDirectory)

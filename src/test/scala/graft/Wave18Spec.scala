@@ -293,7 +293,7 @@ class Wave18Spec extends SparkSpecBase {
       .getAs[String]("line")
     assert(n7.endsWith(";\\N"))
     // The OUTFILE byte stream is on disk.
-    val dir = s"/tmp/graft_outfile_${graft.sources.Formats.sanitize(t.dir)}"
+    val dir = graft.sources.Layouts.root("outfile", t.dir)
     assert(new java.io.File(s"$dir/_SUCCESS").exists())
   }
 
@@ -316,7 +316,7 @@ class Wave18Spec extends SparkSpecBase {
         r.getAs[Long]("cnt"), r.getAs[Double]("total"))).toSet
     assert(section("2_after_rollback") == base)
     // Durability: the commit snapshot really is on disk.
-    val dir = s"/tmp/graft_txn_${graft.sources.Formats.sanitize(t.dir)}"
+    val dir = graft.sources.Layouts.root("txn", t.dir)
     assert(new java.io.File(s"$dir/_SUCCESS").exists())
   }
 }

@@ -77,7 +77,7 @@ class Wave21Spec extends SparkSpecBase {
     assert(rows("1_pre_truncate")._1 > 0)
     // The truncated table still EXISTS (truncate is not drop): the
     // empty generation serves under the original identity.
-    val root = s"/tmp/graft_truncate_${graft.sources.Formats.sanitize(t.dir)}"
+    val root = graft.sources.Layouts.root("truncate", t.dir)
     assert(spark.read.parquet(s"$root/trunc_orders").count() == 0)
   }
 
