@@ -130,18 +130,19 @@ object IvfIndex {
     (assign(corpus, finalCents, "vec_id", "v"), finalCents)
   }
 
-  /** The persisted IVF index over a warehouse's embeddings, built
-    * once per (c, iters, source fingerprint) and returned as its dir
-    * — the ONE spelling shared by every reader of the coarse
-    * quantizer (s_ann_ivf_probe, s_knn_graph_ivf, d_dedup_semantic,
-    * q_show_index, IvfPqIndex.coarseFromSharedCache), so none can key
-    * or build the same index differently. */
-  def sharedIndex(t: graft.Tables, c: Int = 16, iters: Int = 2): String =
+  /** The persisted IVF index over a warehouse's embeddings (16 cells,
+    * 2 Lloyd iterations), built once per source fingerprint and
+    * returned as its dir — the ONE spelling shared by every reader of
+    * the coarse quantizer (s_ann_ivf_probe, s_knn_graph_ivf,
+    * d_dedup_semantic, q_show_index,
+    * IvfPqIndex.coarseFromSharedCache), so none can key or build the
+    * same index differently. */
+  def sharedIndex(t: graft.Tables): String =
     graft.sources.Layouts.once(graft.sources.Layouts.root(
-        s"ivf_c${c}_i${iters}", t.dir, s"${t.dir}/embeddings.parquet")) {
+        "ivf_c16_i2", t.dir, s"${t.dir}/embeddings.parquet")) {
       writeIndex(t.fan(t.embeddings)
         .select(col("vec_id"), toDouble(col("embedding")).as("v")), _,
-        c, iters)
+        16, 2)
     }
 
   /** Persist the index as a warehouse layout: corpus vectors

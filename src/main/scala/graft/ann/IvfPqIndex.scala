@@ -53,13 +53,11 @@ object IvfPqIndex {
     PqIndex.build(resid, m, s, k, iters)
   }
 
-  /** The coarse quantizer from [[IvfIndex.sharedIndex]] (same
-    * parameters, same layout as s_ann_ivf_probe): (cells with
-    * vectors, centroids). One coarse training serves every index
-    * variant composed over it. */
-  def coarseFromSharedCache(t: graft.Tables, c: Int = 16,
-      iters: Int = 2): (DataFrame, DataFrame) = {
-    val dir = IvfIndex.sharedIndex(t, c, iters)
+  /** The coarse quantizer from [[IvfIndex.sharedIndex]] (the same
+    * layout as s_ann_ivf_probe): (cells with vectors, centroids). One
+    * coarse training serves every index variant composed over it. */
+  def coarseFromSharedCache(t: graft.Tables): (DataFrame, DataFrame) = {
+    val dir = IvfIndex.sharedIndex(t)
     (t.spark.read.parquet(s"$dir/cells")
        .select(col("vec_id"), col("cell"), col("v")),
      t.spark.read.parquet(s"$dir/centroids"))

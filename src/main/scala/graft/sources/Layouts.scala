@@ -27,9 +27,10 @@ object Layouts {
     * the build parameters. With `keyedBy` source paths the name also
     * gets `_<fp>`, the concatenated [[Formats.contentFingerprint]]s
     * of those paths, so regenerated source data gets a fresh layout.
-    * Stale `_<oldfp>` siblings (and their leftover staging dirs) are
-    * evicted first, or every regeneration would leave a full previous
-    * copy in /tmp. Other families and other data dirs are never
+    * Stale `_<oldfp>` siblings (and their staging dirs) are evicted
+    * first, or every regeneration would leave a full previous copy in
+    * /tmp; of the current layout's staging dirs only those of dead
+    * builders go. Other families and other data dirs are never
     * touched: their identity is in the prefix, not the suffix. */
   def root(family: String, dataDir: String, keyedBy: String*): String = {
     val prefix = s"/tmp/graft_${family}_${Formats.sanitize(dataDir)}"
@@ -37,14 +38,8 @@ object Layouts {
     else {
       val current =
         s"${prefix}_${keyedBy.map(Formats.contentFingerprint).mkString}"
-      Option(new File(prefix).getParentFile.listFiles())
-        .getOrElse(Array.empty)
-        .filter { f =>
-          val p = f.getPath
-          p.startsWith(prefix + "_") && p != current &&
-            !p.startsWith(current + ".")
-        }
-        .foreach(Formats.deleteRecursively)
+      evict(p => p.startsWith(prefix + "_") && p != current &&
+        !liveStaging(p, current))
       current
     }
   }
@@ -52,25 +47,43 @@ object Layouts {
   /** Build the layout at `root` once: `build` writes into a fresh
     * staging dir, the marker goes in last, and the dir is renamed into
     * place. Skipped entirely while the marker is there. A build that
-    * throws never touches `root`, so the next call rebuilds; of
-    * two concurrent builders one rename wins and the other discards
-    * its copy. An unmarked dir at `root` (half-built, or from before
-    * the marker) is replaced. Returns `root`. */
+    * throws never touches `root`, so the next call rebuilds, and the
+    * staging dir a killed builder left is evicted by the next build.
+    * A layout already marked when this build finishes is kept, and
+    * this builder discards its copy. Only an unmarked dir at `root`
+    * (half-built, or from before the marker) is deleted to make way;
+    * two builders that both find one there race, and the last rename
+    * stays. Returns `root`. */
   def once(root: String)(build: String => Unit): String = {
     val dest = new File(root)
     def built = new File(dest, Marker).exists()
     if (!built) {
+      evict(p => p.startsWith(s"$root.staging-") && !liveStaging(p, root))
       val staging = new File(s"$root.staging-${ProcessHandle.current().pid()}")
       Formats.deleteRecursively(staging)
       staging.mkdirs()
       try {
         build(staging.getPath)
         new File(staging, Marker).createNewFile()
-        if (!built) Formats.deleteRecursively(dest)
-        staging.renameTo(dest)
+        if (!staging.renameTo(dest) && !built) {
+          Formats.deleteRecursively(dest)
+          staging.renameTo(dest)
+        }
       } finally Formats.deleteRecursively(staging)
       require(built, s"layout build did not land at $root")
     }
     root
   }
+
+  /** `<root>.staging-<pid>` of a running process: a build in flight. */
+  private def liveStaging(path: String, root: String): Boolean =
+    path.startsWith(s"$root.staging-") &&
+      path.stripPrefix(s"$root.staging-").toLongOption
+        .exists(ProcessHandle.of(_).isPresent)
+
+  /** Delete every top-level /tmp entry whose path is `doomed`. */
+  private def evict(doomed: String => Boolean): Unit =
+    Option(new File("/tmp").listFiles()).getOrElse(Array.empty)
+      .filter(f => doomed(f.getPath))
+      .foreach(Formats.deleteRecursively)
 }

@@ -31,6 +31,6 @@ object GraftSqlShim {
   /** Block until the driver's (`private[spark]`) listener bus has
     * delivered every posted event, so listener counters read after
     * it are complete — a fixed sleep races on a loaded host. */
-  def drainListenerBus(spark: SparkSession, timeoutMs: Long = 60000L): Unit =
-    spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs)
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty(60000L)
 }

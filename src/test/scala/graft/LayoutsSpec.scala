@@ -97,4 +97,52 @@ class LayoutsSpec extends AnyFunSuite {
         s"/tmp/graft_layoutsspec_${Formats.sanitize(dataDir)}")
     }
   }
+
+  test("a dead builder's staging dir is evicted, a live one's is kept") {
+    withSource { dataDir =>
+      val exited = new ProcessBuilder("true").start()
+      exited.waitFor()
+      val running = new ProcessBuilder("sleep", "60").start()
+      val live = running.pid()
+      def staging(root: String, pid: Long): File = {
+        val d = new File(s"$root.staging-$pid")
+        d.mkdirs()
+        writeFile(s"$d/part", "partial")
+        d
+      }
+      try {
+        val src = s"$dataDir/facts.txt"
+        writeFile(src, "v1")
+        val keyed = Layouts.root("layoutsspec", dataDir, src)
+        val (keyedDead, keyedLive) =
+          (staging(keyed, exited.pid()), staging(keyed, live))
+        assert(Layouts.root("layoutsspec", dataDir, src) == keyed)
+        assert(!keyedDead.exists(), "dead builder's staging dir kept")
+        assert(keyedLive.isDirectory, "live builder's staging dir evicted")
+
+        val plain = Layouts.root("layoutsspec", dataDir)
+        val (plainDead, plainLive) =
+          (staging(plain, exited.pid()), staging(plain, live))
+        Layouts.once(plain)(dir => writeFile(s"$dir/part", "whole"))
+        assert(!plainDead.exists(), "dead builder's staging dir kept")
+        assert(plainLive.isDirectory, "live builder's staging dir evicted")
+      } finally running.destroy()
+    }
+  }
+
+  test("a layout another builder finished first is kept") {
+    withSource { dataDir =>
+      val root = Layouts.root("layoutsspec", dataDir)
+      Layouts.once(root) { dir =>
+        writeFile(s"$dir/part", "mine")
+        // Another builder's rename lands while this one is building.
+        new File(root).mkdirs()
+        writeFile(s"$root/part", "theirs")
+        writeFile(s"$root/_SUCCESS", "")
+      }
+      assert(new String(Files.readAllBytes(Paths.get(s"$root/part")),
+        "UTF-8") == "theirs")
+      assert(siblings(root) == Seq(new File(root).getName))
+    }
+  }
 }
