@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.Formats
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
 
@@ -8,9 +9,14 @@ import org.apache.spark.sql.functions.{col, expr}
   * Mirrors the reference's schema surface (tigraph/tidb `infoschema/`):
   * a fixed catalog of typed tables. On a real cluster these readers
   * point at partitioned/bucketed warehouse paths; locally they read
-  * the single-file parquet from TESTDATA.md. All readers are plain
-  * `spark.read.parquet` so Catalyst keeps filter pushdown, column
-  * pruning and partition pruning.
+  * the single-file parquet from TESTDATA.md. Every reader is
+  * [[graft.sources.Formats.readParquet]]: `spark.read.parquet` with
+  * the footer schema memoized per file content, so opening a table
+  * starts no Spark job (inferring the schema ran one per call). The
+  * schema handed to the reader is the one inference returns and the
+  * relation is built fresh per call, so Catalyst gets the same plan:
+  * filter pushdown, column pruning and partition pruning are
+  * unchanged.
   */
 final case class Tables(spark: SparkSession, dir: String) {
   // The engine's timestamp policy (NTZ files cast to session-UTC
@@ -29,7 +35,7 @@ final case class Tables(spark: SparkSession, dir: String) {
   functions.GraftFunctions.register(spark)
 
   private def t(name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Formats.readParquet(spark, s"$dir/$name.parquet")
 
   def region: DataFrame    = t("region")
   def nation: DataFrame    = t("nation")
@@ -44,15 +50,18 @@ final case class Tables(spark: SparkSession, dir: String) {
     * parquet TIMESTAMP(NANOS) (which Spark's reader rejects outright)
     * and later as TIMESTAMP(MICROS, isAdjustedToUTC=false) (which
     * Spark reads as TIMESTAMP_NTZ) — so branch on the LOADED schema:
-    *  - LongType      → nanos read raw via the legacy conf; the
-    *                    generator is microsecond-aligned, so `div 1000`
-    *                    is a lossless rebuild;
+    *  - LongType      → nanos read raw via the legacy conf, which is
+    *                    set on the session only when the file's footer
+    *                    has a TIMESTAMP(NANOS) column; the generator is
+    *                    microsecond-aligned, so `div 1000` is a
+    *                    lossless rebuild;
     *  - TIMESTAMP_NTZ → cast; under the UTC session zone this keeps
     *                    the wall-clock micros DuckDB sees;
     *  - TimestampType → already the policy type, pass through. */
   def events: DataFrame = {
     import org.apache.spark.sql.types.{LongType, TimestampType}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    if (Tables.hasNanosTimestamp(spark, s"$dir/events.parquet"))
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = t("events")
     raw.schema("ts").dataType match {
       case LongType      => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
@@ -105,6 +114,37 @@ final case class Tables(spark: SparkSession, dir: String) {
 }
 
 object Tables {
+
+  private val nanosMemo = new graft.tools.SessionMemo[String, Boolean]
+
+  /** True when the parquet file (or a data file of the parquet dir)
+    * at `path` has a TIMESTAMP(NANOS) column, which Spark's reader
+    * rejects unless `nanosAsLong` is on. Decided once per content
+    * fingerprint from the footers, read on the driver: no Spark job. */
+  private def hasNanosTimestamp(spark: SparkSession, path: String): Boolean =
+    nanosMemo.get(spark, Formats.contentFingerprint(path)) {
+      import org.apache.parquet.hadoop.ParquetFileReader
+      import org.apache.parquet.hadoop.util.HadoopInputFile
+      import org.apache.parquet.schema.LogicalTypeAnnotation.{
+        TimeUnit, TimestampLogicalTypeAnnotation}
+      import scala.jdk.CollectionConverters._
+      val f = new java.io.File(path)
+      val files = if (f.isDirectory)
+        f.listFiles().toSeq.filter(_.getName.endsWith(".parquet"))
+      else Seq(f)
+      files.exists { file =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(file.toURI),
+          spark.sparkContext.hadoopConfiguration))
+        try reader.getFileMetaData.getSchema.getColumns.asScala.exists {
+          _.getPrimitiveType.getLogicalTypeAnnotation match {
+            case ts: TimestampLogicalTypeAnnotation =>
+              ts.getUnit == TimeUnit.NANOS
+            case _ => false
+          }
+        } finally reader.close()
+      }
+    }
 
   /** True when the session timezone is a fixed zero-offset zone
     * (any spelling: "UTC", "Etc/UTC", "GMT", "+00:00") — the ONE

@@ -815,7 +815,7 @@ object DedupQueries {
           .select(fp.as("fp")).distinct()
           .write.mode("overwrite").parquet(dir)
       }
-      val corpusIndex = t.documents.sparkSession.read.parquet(idxDir)
+      val corpusIndex = t.spark.read.parquet(idxDir)
       t.documents.filter(col("doc_id") % 10 === 0)
         .select(fp.as("fp"), col("doc_id"))
         .join(corpusIndex, Seq("fp"), "left_anti")

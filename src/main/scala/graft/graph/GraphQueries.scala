@@ -206,7 +206,7 @@ object GraphQueries {
     """)) { t =>
       val filtered = Graph.derived(t.orders).edges
         .filter((col("src") + col("dst")) % 7 =!= 0)
-      val sources = t.orders.sparkSession.range(1)
+      val sources = t.spark.range(1)
         .select(lit(0L).as("src"))
       Graph(filtered).reachLevels(sources, "out", minHops = 2, maxHops = 4)
     },

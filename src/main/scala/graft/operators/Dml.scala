@@ -412,7 +412,7 @@ object Dml {
     }
 
   def mvMerged(t: Tables): org.apache.spark.sql.DataFrame = {
-    val mv = t.orders.sparkSession.read.parquet(mvDir(t))
+    val mv = t.spark.read.parquet(mvDir(t))
     val delta = mvPartial(t.orders.filter(col("o_orderdate") >= mvSplit))
     mv.union(delta)
       .groupBy("o_orderpriority")

@@ -240,10 +240,11 @@ object Wave19 {
         ("time_zone", s.conf.get("spark.sql.session.timeZone"),
           "SESSION"),
         // NOT rendered: spark.sql.legacy.parquet.nanosAsLong — the
-        // Tables events reader sets it lazily on first access, so
-        // its value is execution-order-dependent within a Verify
-        // run; an order-dependent variable has no honest place in a
-        // hashed card. Shuffle partitions are likewise excluded
+        // Tables events reader sets it on first access when the
+        // events file holds TIMESTAMP(NANOS), so its value can be
+        // execution-order-dependent within a Verify run; an
+        // order-dependent variable has no honest place in a hashed
+        // card. Shuffle partitions are likewise excluded
         // (they track the harness core count: Verify 4, Bench 32).
         // ScopeNone = read-only build fact; major.minor only so a
         // patch upgrade is not a correctness event.

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
-import graft.sources.Layouts
+import graft.sources.{Formats, Layouts}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -34,8 +34,7 @@ object Wave6 {
   def timeTravelStore(t: Tables): String =
     Layouts.once(Layouts.root("timetravel", t.dir,
         s"${t.dir}/events.parquet", s"${t.dir}/orders.parquet")) { build =>
-      val spark = t.orders.sparkSession
-      import spark.implicits._
+      import t.spark.implicits._
       // O(1) driver scalar (like the graph convergence checks): the
       // max change sequence fixes the batch cutoffs. An empty events
       // table (null max) means no change batches — every version is
@@ -110,8 +109,7 @@ object Wave6 {
       // Spark 4 fences encode/decode to a unicode allow-list; GBK is
       // a JVM charset behind the legacy flag (same use-site-conf
       // pattern as Tables.events' nanosAsLong).
-      t.customer.sparkSession.conf
-        .set("spark.sql.legacy.javaCharsets", "true")
+      t.spark.conf.set("spark.sql.legacy.javaCharsets", "true")
       t.customer.filter(col("c_custkey") < 300)
         .select(col("c_custkey"), s.as("s"), s2.as("s2"))
         .select(col("c_custkey"),
@@ -345,8 +343,7 @@ object Wave6 {
       FROM (SELECT o_orderkey, o_totalprice FROM orders) b
       FULL OUTER JOIN l ON b.o_orderkey = l.k
     """)) { t =>
-      val spark = t.orders.sparkSession
-      spark.read.parquet(s"${timeTravelStore(t)}/version=1")
+      Formats.readParquet(t.spark, s"${timeTravelStore(t)}/version=1")
     },
 
     // Timestamp-addressed AS-OF read (reference: `AS OF TIMESTAMP` /
@@ -382,14 +379,14 @@ object Wave6 {
       FROM (SELECT o_orderkey, o_totalprice FROM orders) b
       FULL OUTER JOIN l ON b.o_orderkey = l.k
     """)) { t =>
-      val spark = t.orders.sparkSession
+      val spark = t.spark
       val dir = timeTravelStore(t)
       val meta = spark.read.parquet(s"$dir/_meta")
       val tAsOf = meta.filter(col("version") === 1)
         .head().getAs[Long]("commit_ts_us")
       val pick = meta.filter(col("commit_ts_us") <= tAsOf)
         .agg(max("version")).head().getInt(0)
-      spark.read.parquet(s"$dir/version=$pick")
+      Formats.readParquet(spark, s"$dir/version=$pick")
     },
   )
 }

@@ -39,7 +39,7 @@ object Wave7 {
         .option("sep", "|").option("quote", "\"").option("escape", "\\")
         .option("header", "true")
         .csv(dir)
-      t.customer.sparkSession.read
+      t.spark.read
         .option("sep", "|").option("quote", "\"").option("escape", "\\")
         .option("header", "true").option("multiLine", "true")
         .schema("c_custkey bigint, payload string, c_acctbal double")

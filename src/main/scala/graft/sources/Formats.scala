@@ -71,6 +71,32 @@ object Formats {
   def sanitize(path: String): String =
     path.replaceAll("[^A-Za-z0-9.]+", "-").stripPrefix("-")
 
+  private val parquetSchemas = new graft.tools.SessionMemo[
+    (String, Seq[(String, String)]), StructType]
+
+  /** `spark.read.parquet(path)` without its per-call schema-inference
+    * job: the footer schema is inferred once per (content
+    * fingerprint, the session's explicitly set `*.parquet.*` confs —
+    * nanosAsLong, binaryAsString and friends change what inference
+    * returns) and then handed to the reader. The schema is the one
+    * inference gives (both paths make it `asNullable`), so plans,
+    * pushdown and pruning are unchanged; a file replaced at the same
+    * path gets a new fingerprint and is re-inferred; a failed
+    * inference is not cached. Every call still builds a fresh
+    * relation, file listing and expression ids — a memoized
+    * DataFrame would trip Spark's ambiguous-self-join check and
+    * serve stale listings. The fingerprint covers only the top
+    * level of a directory, so an incremental layout that appends into
+    * nested dirs must read through `spark.read.parquet` /
+    * [[readParquetOr]] instead. */
+  def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val conf = spark.conf.getAll.toSeq
+      .filter { case (k, _) => k.contains(".parquet.") }.sorted
+    val schema = parquetSchemas.get(spark,
+      (contentFingerprint(path), conf))(spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
+  }
+
   /** Parquet read that degrades to `empty` on EXACTLY the two
     * analysis-time absent-layout conditions (missing path, dir with
     * no data files) — any other read failure (permissions, listing
