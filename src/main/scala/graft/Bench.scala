@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark: runs every registry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line. Results are forced
   * through the noop sink — full materialization of every operator —
@@ -11,27 +9,14 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // See Verify: sound because writeBucketed guarantees one file
-      // per bucket (Spark re-verifies before trusting the order).
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Run.session(32)
     val t = Tables(spark, sfDir)
     // Untimed warmup: exercise the scan+agg+join+window pipeline once
     // so JIT/codegen compilation doesn't land on the first measured
     // queries (steady-state timings are what a resident engine sees).
     // Optional dev-only filter (comma-separated names): bench a subset
-    // while iterating. The driver passes no args → full suite.
-    val wanted = args.headOption.map(_.split(",").toSet)
+    // while iterating; an unknown name throws. No args → full suite.
+    val wanted = args.headOption.map(names => Run.select(names.split(",")))
     // Untimed warmup. Full runs warm a fixed pipeline-covering set —
     // including every query with a lazy one-time on-disk layout build
     // (IVF index, partitioned lineitem, corpus fingerprint index), so
@@ -41,9 +26,7 @@ object Bench {
     // once untimed instead — otherwise the first measured query
     // absorbs JIT/codegen compilation, skewing exactly the subset
     // timings the filter exists to produce.
-    val warmup = wanted match {
-      case Some(names) => Registry.all.filter(q => names.contains(q.name))
-      case None => Registry.all.filter(q => Set("q_scan_filter",
+    val warmup = wanted.getOrElse(Run.select(Seq("q_scan_filter",
         "q_agg_hash", "q_join_broadcast", "q_window_rank",
         "s_ann_ivf_probe", "q_scan_partition", "d_dedup_incremental",
         "q_time_travel", "q_backup_restore", "q_mv_refresh",
@@ -74,8 +57,7 @@ object Bench {
         "s_ivf_retrain",
         // r17 continuation: the staged near-dup admit index and the
         // drift-dashboard serving root are marker-gated lazy layouts.
-        "d_dedup_admit", "s_drift_series")
-        .contains(q.name))
+        "d_dedup_admit", "s_drift_series"))
         // Session memos (tf inverted index, bounded kNN graph, bigram
         // LM scores, shingle pairing) are NOT pre-warmed: unlike the
         // on-disk layouts above — which model serving from a persisted
@@ -85,9 +67,9 @@ object Bench {
         // cost those entries exist to measure. The first family member
         // in registry order pays the memo build in its timed slot;
         // later members measure the steady state the memo serves.
-    }
+    )
     warmup.foreach { q =>
-      try q.run(t).write.format("noop").mode("overwrite").save()
+      try Run.execute(q, t)
       catch { case scala.util.control.NonFatal(e) =>
         // A failed warmup voids the steady-state guarantee for this
         // query (its one-time build lands in the measured run) — say
@@ -101,14 +83,14 @@ object Bench {
     def measure(q: Q): Double = {
       val t0 = System.nanoTime()
       try {
-        q.run(t).write.format("noop").mode("overwrite").save()
+        Run.execute(q, t)
         (System.nanoTime() - t0) / 1e9
       } catch { case e: Throwable =>
         System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")
         -1.0
       }
     }
-    val selected = Registry.all.filter(q => wanted.forall(_.contains(q.name)))
+    val selected = wanted.getOrElse(Registry.all)
     val firstPass = selected.map { q =>
       // Iterative queries localCheckpoint their loop state and Spark
       // only reclaims those blocks (and old broadcasts) when the JVM

@@ -1,43 +1,26 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool for the optimization rounds: dump `.explain("formatted")`
   * for a comma-separated list of registry queries into an output
   * directory (one `<name>.txt` per query). Plan-only — the DataFrame
   * is built (including any lazy layout construction a query performs
   * while assembling its plan) but the final plan is not executed, so
-  * a dump is cheap and safe to run beside nothing else.
+  * a dump is cheap and safe to run beside nothing else. An unknown
+  * name throws.
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> name1,name2,...
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val sfDir = args(0)
     val outDir = args(1)
-    val names = args(2).split(",").toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val t = Tables(spark, sfDir)
+    val spark = Run.session(32)
+    val t = Tables(spark, args(0))
     new java.io.File(outDir).mkdirs()
-    Registry.all.filter(q => names.contains(q.name)).foreach { q =>
+    Run.select(args(2).split(",")).foreach { q =>
       try {
-        val df = q.run(t)
-        val txt = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
         java.nio.file.Files.write(
           java.nio.file.Paths.get(s"$outDir/${q.name}.txt"),
-          txt.getBytes("UTF-8"))
+          tools.Explain.formatted(q.name, t).getBytes("UTF-8"))
         println(s"[plandump] wrote ${q.name}")
       } catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[plandump] ${q.name} FAILED: ${e.getMessage}")

@@ -13,7 +13,7 @@ object SparkEntry {
   /** Flagship query (TPC-H Q5 shape, 6-way join) on sf=0.001;
     * driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    Registry.all.find(_.name == "q_tpch_q5").get
+    Registry.byName("q_tpch_q5")
       .run(Tables(spark, "/root/testdata/sf0.001"))
 
   /** One entry per implemented operator from SURVEY.md §2. */

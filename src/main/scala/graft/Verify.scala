@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,25 +6,12 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     // Optional 3rd arg (dev-only): comma-separated query-name filter
-    // for a fast inner loop on a subset.
+    // for a fast inner loop on a subset; an unknown name throws.
     val keep: String => Boolean = args.lift(2) match {
-      case Some(names) => names.split(',').toSet
+      case Some(names) => Run.select(names.split(',')).map(_.name).toSet
       case None => _ => true
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // Bucketed scans expose their sortBy order as plan ordering
-      // (the zero-Sort co-located merge join). Sound here because
-      // Bucketing.writeBucketed guarantees one file per bucket, and
-      // Spark re-verifies that before trusting the order.
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Run.session(4)
     new java.io.File(outDir).mkdirs()
     // A query that throws must leave a LOUD artifact, not just vanish
     // from the output set (r6: 21 events queries silently disappeared

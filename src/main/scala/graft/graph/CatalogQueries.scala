@@ -578,8 +578,8 @@ object CatalogQueries {
     * the edge table by label, apply its WHERE before the hop" so the
     * six pattern types cannot prune differently. Long-typed ids —
     * the path kernels render/seed BIGINT nodes. */
-  /** Per-JVM memo of the pruned typed edge lists AND the derived BFS
-    * targets, keyed (dir, label, predicate-render) — the
+  /** Per-session memo of the pruned typed edge lists AND the derived
+    * BFS targets, keyed (dir, label, predicate-render) — the
     * SampleStats.boundsRow pattern: the strength>=40 knows list is
     * consumed by THREE path entries (allshortest / topk / allpaths)
     * and the distance-3 target probe by two, and each build is an
@@ -587,13 +587,9 @@ object CatalogQueries {
     * pure derivations of the immutable source dir (mutating entries
     * build their OWN mutated copies), so the memoized checkpoint
     * stays valid for the session's lifetime. */
-  /** The edge memo stores session-bound localCheckpoint'd frames —
-    * SessionMemo carries the session key + stopped-session eviction.
-    * targetMemo stores plain Long scalars, so (dir, label,
-    * predicate) alone is correct there. */
   private val edgeMemo = new graft.tools.SessionMemo[
     (String, String, String), org.apache.spark.sql.DataFrame]
-  private val targetMemo = new scala.collection.concurrent.TrieMap[
+  private val targetMemo = new graft.tools.SessionMemo[
     (String, String, String), Long]
 
   /** Per-session memo of the weighted-PageRank state over the
@@ -648,12 +644,12 @@ object CatalogQueries {
     * catalog data itself changed shape. */
   private def derivedTarget(t: Tables, label: String,
       edgeWhere: org.apache.spark.sql.Column, g: Graph): Long =
-    targetMemo.getOrElseUpdate((t.dir, label, edgeWhere.toString), {
+    targetMemo.get(t.spark, (t.dir, label, edgeWhere.toString)) {
       val r = g.shortestDistances(1L, "out", maxHops = 3)
         .filter(col("dist") === 3).agg(min(col("node"))).head()
       require(!r.isNullAt(0), "no vertex at distance 3 from anchor 1")
       r.getLong(0)
-    })
+    }
 
   /** Unrolled weighted-PageRank oracle over the declared `knows`
     * table (the pageRankOracle shape with w_uv / W_u shares; every

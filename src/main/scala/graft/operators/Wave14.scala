@@ -60,25 +60,21 @@ object SampleStats {
       .map(i => when(col("v") > col(s"b$i"), 1).otherwise(0))
       .reduce(_ + _) + 1
 
-  /** Per-JVM memo of the boundary ROW per (dir, sampled-input) —
-    * the Bpe.mergesFor pattern. The percentile boundary aggregate is
+  /** Per-session memo of the boundary ROW per (dir, sampled-input)
+    * — the Bpe.mergesFor pattern. The percentile boundary aggregate is
     * the stats family's dominant cost (probed in r15: the decimal
     * percentile kernel, not data volume), and q_stats_histogram /
     * q_selectivity / q_stats_buckets / q_analyze_sample all consume
     * the SAME 8-bucket structure — so the kernel runs once per
     * session per (dir, input) and every later consumer gets the row
-    * as literals. Same immutability contract as Bpe: a test that
-    * regenerates a dir in place calls [[resetMemo]] first. */
-  private val boundsMemo = new scala.collection.concurrent.TrieMap[
+    * as literals. Same immutability contract as Bpe. */
+  private val boundsMemo = new graft.tools.SessionMemo[
     (String, Boolean), org.apache.spark.sql.Row]
 
   def boundsRow(t: Tables, sampled: Boolean = false)
       : org.apache.spark.sql.Row =
-    boundsMemo.getOrElseUpdate((t.dir, sampled),
+    boundsMemo.get(t.spark, (t.dir, sampled))(
       priceBounds(if (sampled) sampledOrders(t) else t.orders).head())
-
-  /** Test-visible escape hatch for the immutable-input assumption. */
-  def resetMemo(): Unit = boundsMemo.clear()
 
   /** One-row LITERAL DataFrame with [[priceBounds]]' exact schema,
     * built from the memoized row: consumers keep their

@@ -46,24 +46,18 @@ object Bpe {
       st => st.getField("acc"))
   }
 
-  /** Per-JVM memo of trained merge tables keyed by (data dir, k) —
-    * training is deterministic, so t_bpe_apply reuses t_bpe_train's
+  /** Per-session memo of trained merge tables keyed by (data dir, k)
+    * — training is deterministic, so t_bpe_apply reuses t_bpe_train's
     * table instead of re-running the merge loop when both run in one
     * session (bench/verify do).
     *
-    * ASSUMES the documents table at a dir is immutable for the JVM's
-    * lifetime (true for the driver's testdata and any warehouse
-    * snapshot path). If a test regenerates data in place, call
-    * [[resetMemo]] first or the memo serves stale merges. */
-  private val memo = new scala.collection.concurrent.TrieMap[
+    * ASSUMES the documents table at a dir is immutable for the
+    * session's lifetime (true for the shipped testdata and any
+    * warehouse snapshot path). */
+  private val memo = new graft.tools.SessionMemo[
     (String, Int), Seq[(Int, String, String, Long)]]
   def mergesFor(t: graft.Tables, k: Int): Seq[(Int, String, String, Long)] =
-    memo.getOrElseUpdate((t.dir, k),
-      trainMerges(t.fan(t.documents), k))
-
-  /** Test-visible escape hatch for the immutable-input assumption
-    * above: drop every cached merge table (all dirs, all k). */
-  def resetMemo(): Unit = memo.clear()
+    memo.get(t.spark, (t.dir, k))(trainMerges(t.fan(t.documents), k))
 
   /** Tokenize with a trained merge table: per DISTINCT word, chars →
     * the merge sequence applied in training order (map-side HOF

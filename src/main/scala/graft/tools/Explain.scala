@@ -1,7 +1,8 @@
 package graft.tools
 
 import graft.{Registry, Tables}
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{CostMode, ExplainMode}
 
 /** EXPLAIN as a first-class capability (reference: executor/
   * explain.go ExplainExec): render the optimizer's plan for any
@@ -24,4 +25,13 @@ object Explain {
   def plan(name: String, t: Tables, mode: String): String =
     Registry.byName(name).run(t).queryExecution
       .explainString(ExplainMode.fromString(mode))
+
+  /** Optimized logical plan with per-operator size/rowCount estimates
+    * (reference: TiDB's EXPLAIN rows carry estRows/cost from its
+    * stats-driven planner, planner/core/stats.go). rowCount appears
+    * once ANALYZE'd stats (sources.Stats) and CBO propagate through
+    * the plan, which is how a user audits WHY a join broadcast or
+    * reordered. */
+  def cost(df: DataFrame): String =
+    df.queryExecution.explainString(CostMode)
 }

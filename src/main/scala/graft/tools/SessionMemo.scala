@@ -2,7 +2,8 @@ package graft.tools
 
 /** ONE spelling of the session-scoped memo discipline used by every
   * shared-build cache in the repo (derived graphs, catalog edge
-  * lists, posting bases, weighted-PageRank state): entries hold
+  * lists and path targets, posting bases, weighted-PageRank state,
+  * BPE merge tables, stats bucket bounds): entries may hold
   * session-bound values (localCheckpoint'd DataFrames, Graph
   * instances wrapping them), so the SparkSession is part of the key
   * and entries of stopped sessions are evicted on every access — a

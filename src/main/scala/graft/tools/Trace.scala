@@ -21,21 +21,9 @@ object Trace {
     * shells). */
   final case class Node(name: String, rowsOut: Option[Long])
 
-  def run(name: String, t: Tables): Seq[Node] = {
-    val df = Registry.byName(name).run(t)
-    // Drive THIS DataFrame's own physical plan (toRdd), not a sink
-    // write: df.write wraps the query in a separate write-command
-    // QueryExecution, which would leave df.queryExecution's metrics
-    // forever empty and this trace reporting zeros.
-    df.queryExecution.toRdd.count()
-    def walk(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case s: QueryStageExec        => Seq(s.plan)
-      case o                        => o.children
-    }).flatMap(walk)
-    walk(df.queryExecution.executedPlan)
-      .map(n => Node(n.nodeName, n.metrics.get("numOutputRows").map(_.value)))
-  }
+  /** The pre-order operator list of [[profile]]'s tree. */
+  def run(name: String, t: Tables): Seq[Node] =
+    profile(name, t).map(n => Node(n.name, n.rowsOut))
 
   /** One node of the execution-time profile tree: pre-order id,
     * parent id (-1 at the root), depth, operator name, output rows,
@@ -49,8 +37,8 @@ object Trace {
     * profileBuilder — the tree-shaped time rollup over the metrics,
     * where each node carries its own cost and the tree aggregates
     * child costs upward). Spark's runtime twin: execute the entry,
-    * walk the FINAL adaptive plan preserving parent/child edges (the
-    * same AQE-aware descent as [[run]]), take each operator's
+    * walk the FINAL adaptive plan preserving parent/child edges
+    * (descending through AQE query stages), take each operator's
     * timing-typed SQLMetrics as its self cost, and roll subtree
     * totals bottom-up. Driver-sized by construction (one row per
     * plan operator). Timing values are wall clock — the q_slow_

@@ -82,7 +82,7 @@ class CboSpec extends SparkSpecBase {
 
       // The cost EXPLAIN surface exposes the estimates the decision
       // was made from (TiDB EXPLAIN estRows analog).
-      val costPlan = graft.plans.Explain.cost(
+      val costPlan = graft.tools.Explain.cost(
         spark.table("cbo_orders").filter(col("o_orderkey") < 10))
       assert(costPlan.contains("Statistics(") &&
         costPlan.contains("rowCount="),

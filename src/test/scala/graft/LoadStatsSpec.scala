@@ -58,7 +58,7 @@ class LoadStatsSpec extends SparkSpecBase {
       Stats.analyze(spark, "ls_orders",
         Seq("o_orderkey", "o_orderpriority"))
       Stats.analyze(spark, "ls_lineitem")
-      val analyzed = graft.plans.Explain.cost(
+      val analyzed = graft.tools.Explain.cost(
         spark.table("ls_orders").filter(col("o_orderkey") < 10))
       val analyzedPlan = joinPlan()
       assert(analyzedPlan.contains("BroadcastHashJoin"),
@@ -83,7 +83,7 @@ class LoadStatsSpec extends SparkSpecBase {
 
       // The injected estimates are the analyzed ones, not merely
       // close: the cost-explain row estimate lines match.
-      val reloaded = graft.plans.Explain.cost(
+      val reloaded = graft.tools.Explain.cost(
         spark.table("ls_orders").filter(col("o_orderkey") < 10))
       // Expression ids (#NNNN) are allocation-order artifacts —
       // normalize them away; the Statistics(...) payloads must match.

@@ -10,19 +10,10 @@ trait SparkSpecBase extends AnyFunSuite {
 }
 
 object SparkSpecBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // Match the Verify/Bench sessions: bucketed scans expose their
-      // sortBy order (sound — writeBucketed gives 1 file per bucket).
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The `Run` session with the specs' own master, 8 shuffle
+    * partitions and warehouse dir. */
+  lazy val session: SparkSession = Run.session(4,
+    "spark.master" -> "local[4]",
+    "spark.sql.shuffle.partitions" -> "8",
+    "spark.sql.warehouse.dir" -> "/tmp/graft_warehouse")
 }

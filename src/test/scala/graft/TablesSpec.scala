@@ -2,9 +2,6 @@ package graft
 
 import graft.sources.Formats
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.GraftSqlShim
 import org.apache.spark.sql.types.{StructType, TimestampNTZType, TimestampType}
 
 /** Table opens read the memoized footer schema: no Spark job per
@@ -12,31 +9,17 @@ import org.apache.spark.sql.types.{StructType, TimestampNTZType, TimestampType}
   * when the file at a path changes. */
 class TablesSpec extends SparkSpecBase {
 
-  /** Spark jobs started while `body` runs. */
-  private def jobsDuring(body: => Unit): Int = {
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    GraftSqlShim.drainListenerBus(spark)
-    spark.sparkContext.addSparkListener(listener)
-    try { body; GraftSqlShim.drainListenerBus(spark) }
-    finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get
-  }
-
   test("after a first open, reopening each of the 10 tables starts " +
     "no Spark job") {
     assert(t.registered.size == 10)
     // The counter sees the job a bare inferring read starts.
-    assert(jobsDuring(spark.read.parquet(s"${t.dir}/region.parquet")) == 1)
+    assert(Run.counts(spark)(
+      spark.read.parquet(s"${t.dir}/region.parquet")).jobs == 1)
     t.registered
     for (open <- Seq[Tables => Any](_.region, _.nation, _.customer,
         _.supplier, _.part, _.orders, _.lineitem, _.events, _.documents,
         _.embeddings))
-      assert(jobsDuring(open(t)) == 0)
+      assert(Run.counts(spark)(open(t)).jobs == 0)
   }
 
   test("each accessor's schema equals a fresh inferring read's") {
