@@ -353,12 +353,12 @@ object Analytics {
       val m = t.orders
         .groupBy(year(col("o_orderdate")).as("y"),
           month(col("o_orderdate")).as("m"))
-        .agg(sum(col("o_totalprice").cast("decimal(18,2)")).cast("double")
-          .as("sales"), count(lit(1)).as("n_orders"))
+        .agg(Exact.sum2(col("o_totalprice")).as("sales"),
+          count(lit(1)).as("n_orders"))
       val w = Window.orderBy(col("y"), col("m"))
       m.select(col("y"), col("m"), col("sales"), col("n_orders"),
-        sum(col("sales").cast("decimal(18,2)"))
-          .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+        Exact.sumCents(col("sales"), Some(
+          w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
           .cast("double").as("cum_sales"),
         round(col("sales") - lag(col("sales"), 1).over(w), 2)
           .as("mom_delta"))
@@ -382,7 +382,7 @@ object Analytics {
     """)) { t =>
       val wide = t.lineitem.groupBy("l_returnflag")
         .pivot("l_linestatus", Seq("F", "O"))
-        .agg(sum(col("l_quantity").cast("decimal(18,2)")).cast("double"))
+        .agg(Exact.sum2(col("l_quantity")))
       wide.unpivot(Array(col("l_returnflag")),
         Array(col("F"), col("O")), "l_linestatus", "sum_qty")
     },

@@ -358,11 +358,11 @@ object Relational {
         .orderBy(col("o_orderdate"), col("o_orderkey"))
       t.orders.filter(col("o_custkey") < 100)
         .select(col("o_custkey"), col("o_orderkey"),
-          sum(dec2(col("o_totalprice")))
-            .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+          sumCents(col("o_totalprice"), Some(
+            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
             .cast("double").as("running_spend"),
-          sum(dec2(col("o_totalprice")))
-            .over(w.rowsBetween(-2, Window.currentRow))
+          sumCents(col("o_totalprice"), Some(
+            w.rowsBetween(-2, Window.currentRow)))
             .cast("double").as("window3_spend"))
     },
 
@@ -647,7 +647,7 @@ object Relational {
         .rangeBetween(-30, Window.currentRow)
       base.select(col("o_custkey"), col("o_orderkey"),
         count(lit(1)).over(w).as("n_last30d"),
-        sum(dec2(col("o_totalprice"))).over(w).cast("double")
+        sumCents(col("o_totalprice"), Some(w)).cast("double")
           .as("spend_last30d"))
     },
 
@@ -709,15 +709,16 @@ object Relational {
       WHERE l_shipdate >= TIMESTAMP '1997-09-01'
         AND l_shipdate < TIMESTAMP '1997-10-01'
     """)) { t =>
-      val disc = dec2(col("l_extendedprice")) * dec2(lit(1) - col("l_discount"))
+      val disc = times(cents(col("l_extendedprice")),
+        cents(lit(1) - col("l_discount")))
       t.lineitem.filter(
           col("l_shipdate") >= lit("1997-09-01").cast("timestamp") &&
             col("l_shipdate") < lit("1997-10-01").cast("timestamp"))
         .join(broadcast(t.part), col("l_partkey") === col("p_partkey"))
         .agg((lit(100.0) *
-          sum(when(col("p_type") === "ECONOMY", disc).otherwise(lit(0)))
-            .cast("double") /
-          sum(disc).cast("double")).as("promo_revenue"))
+          sumUnits(when(col("p_type") === "ECONOMY", disc).otherwise(lit(0L)),
+            4).cast("double") /
+          sumUnits(disc, 4).cast("double")).as("promo_revenue"))
     },
 
     // TPC-H Q19 shape: disjunction of conjunctive predicates — the

@@ -37,23 +37,22 @@ object TpchFull {
       WHERE l_shipdate <= TIMESTAMP '2001-09-02'
       GROUP BY l_returnflag, l_linestatus
     """)) { t =>
+      // In long units: (1 - d) is 100 - d at scale 2, so the discounted
+      // price is scale 4 and the charge p·(100−d)·(100+t) scale 6.
+      val discPrice = times(cents(col("l_extendedprice")),
+        lit(100) - cents(col("l_discount")))
       t.lineitem
         .filter(col("l_shipdate") <= lit("2001-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
           sum2(col("l_quantity")).as("sum_qty"),
           sum2(col("l_extendedprice")).as("sum_base_price"),
-          sum(dec2(col("l_extendedprice")) * (lit(1) - dec2(col("l_discount"))))
-            .cast("double").as("sum_disc_price"),
-          sum(dec2(col("l_extendedprice")) * (lit(1) - dec2(col("l_discount")))
-            * (lit(1) + dec2(col("l_tax"))))
+          sumUnits(discPrice, 4).cast("double").as("sum_disc_price"),
+          sumUnits(times(discPrice, lit(100) + cents(col("l_tax"))), 6)
             .cast("double").as("sum_charge"),
-          (sum(dec2(col("l_quantity"))).cast("double") / count(lit(1)))
-            .as("avg_qty"),
-          (sum(dec2(col("l_extendedprice"))).cast("double") / count(lit(1)))
-            .as("avg_price"),
-          (sum(dec2(col("l_discount"))).cast("double") / count(lit(1)))
-            .as("avg_disc"),
+          (sum2(col("l_quantity")) / count(lit(1))).as("avg_qty"),
+          (sum2(col("l_extendedprice")) / count(lit(1))).as("avg_price"),
+          (sum2(col("l_discount")) / count(lit(1))).as("avg_disc"),
           count(lit(1)).as("count_order"))
     },
 
@@ -134,8 +133,8 @@ object TpchFull {
         .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
           col("l_shipdate") < lit("1996-04-01").cast("timestamp"))
         .groupBy(col("l_suppkey").as("supplier_no"))
-        .agg(sum(dec2(col("l_extendedprice")) *
-          (lit(1) - dec2(col("l_discount")))).as("total_revenue"))
+        .agg(sumUnits(times(cents(col("l_extendedprice")),
+          lit(100) - cents(col("l_discount"))), 4).as("total_revenue"))
         .localCheckpoint()
       val top = revenue.agg(max(col("total_revenue")).as("max_rev"))
       t.supplier
@@ -177,15 +176,14 @@ object TpchFull {
           col("p_partkey") === col("l_partkey"), "left_semi")
         .groupBy(col("l_partkey").as("pk"))
         .agg(count(lit(1)).as("n_pk"),
-          sum(dec2(col("l_quantity"))).as("sum_qty_pk"))
+          sumCents(col("l_quantity")).as("sum_qty_pk"))
       t.lineitem
         .join(broadcast(brandParts),
           col("p_partkey") === col("l_partkey"))
         .join(perPart, col("pk") === col("l_partkey"))
         .filter(dec2(col("l_quantity")) * 5 * col("n_pk") <
           col("sum_qty_pk"))
-        .agg((sum(dec2(col("l_extendedprice"))).cast("double") / 7.0)
-          .as("avg_yearly"))
+        .agg((sum2(col("l_extendedprice")) / 7.0).as("avg_yearly"))
     },
   )
 }

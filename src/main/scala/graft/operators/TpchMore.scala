@@ -99,7 +99,8 @@ object TpchMore {
         col("n_regionkey").as("n1_region"))
       val n2 = t.nation.select(col("n_nationkey").as("n2_key"),
         col("n_name").as("nation"))
-      val vol = dec2(col("l_extendedprice")) * dec2(lit(1) - col("l_discount"))
+      val vol = times(cents(col("l_extendedprice")),
+        cents(lit(1) - col("l_discount")))
       t.lineitem
         .join(broadcast(t.part.filter(col("p_type") === "ECONOMY")),
           col("l_partkey") === col("p_partkey"))
@@ -115,9 +116,9 @@ object TpchMore {
         .join(broadcast(n2), col("s_nationkey") === col("n2_key"))
         .groupBy(year(col("o_orderdate")).as("o_year"))
         .agg(round(
-          sum(when(col("nation") === "NATION_3", vol)
-            .otherwise(lit(0).cast("decimal(18,4)"))).cast("double") /
-            sum(vol).cast("double"), 4).as("mkt_share"))
+          sumUnits(when(col("nation") === "NATION_3", vol)
+            .otherwise(lit(0L)), 4).cast("double") /
+            sumUnits(vol, 4).cast("double"), 4).as("mkt_share"))
     },
 
     // Q12 shape — late-shipment priority counts (no l_shipmode /
@@ -162,7 +163,7 @@ object TpchMore {
       // per-order sums join straight to orders/customer — no second
       // lineitem shuffle, no re-aggregation on five columns.
       val big = t.lineitem.groupBy("l_orderkey")
-        .agg(sum(dec2(col("l_quantity"))).as("q"))
+        .agg(sumCents(col("l_quantity")).as("q"))
         .filter(col("q") > 250)
       big
         .join(t.orders, col("o_orderkey") === col("l_orderkey"))
@@ -235,8 +236,7 @@ object TpchMore {
       val codes = Seq(1, 3, 5, 7, 9)
       val inCode = t.customer.filter((col("c_nationkey") % 10).isin(codes: _*))
       val thresh = inCode.filter(col("c_acctbal") > 0.0)
-        .agg((sum(dec2(col("c_acctbal"))).cast("double") / count(lit(1)))
-          .as("avg_bal"))
+        .agg((sum2(col("c_acctbal")) / count(lit(1))).as("avg_bal"))
       inCode
         .crossJoin(broadcast(thresh))
         .filter(col("c_acctbal") > col("avg_bal"))
@@ -334,15 +334,17 @@ object TpchMore {
       t.lineitem
         .join(broadcast(t.part.filter(col("p_type") === "PROMO")),
           col("p_partkey") === col("l_partkey"))
-        .withColumn("cost", min(dec2(col("l_extendedprice"))).over(w) *
-          lit(0.01).cast("decimal(4,2)"))
+        // cost = min price x 0.01: at scale 4 its units are the min
+        // price's cents.
+        .withColumn("cost", min(cents(col("l_extendedprice"))).over(w))
         .join(broadcast(t.supplier), col("l_suppkey") === col("s_suppkey"))
         .join(broadcast(t.nation), col("s_nationkey") === col("n_nationkey"))
         .join(t.orders, col("o_orderkey") === col("l_orderkey"))
         .groupBy(col("n_name"), year(col("o_orderdate")).as("o_year"))
-        .agg(sum(dec2(col("l_extendedprice")) *
-            dec2(lit(1) - col("l_discount")) -
-            col("cost") * dec2(col("l_quantity")))
+        .agg(sumUnits(minus(
+            times(times(cents(col("l_extendedprice")),
+              cents(lit(1) - col("l_discount"))), lit(100)),
+            times(col("cost"), cents(col("l_quantity")))), 6)
           .cast("double").as("sum_profit"))
     },
 
@@ -363,8 +365,8 @@ object TpchMore {
           col("l_shipdate") < lit("1997-01-01").cast("timestamp") &&
           col("l_discount") >= 0.05 && col("l_discount") <= 0.07 &&
           col("l_quantity") < 24)
-        .agg(sum(dec2(col("l_extendedprice")) * dec2(col("l_discount")))
-          .cast("double").as("revenue"))
+        .agg(sumProd2(col("l_extendedprice"), col("l_discount"))
+          .as("revenue"))
     },
 
     // Q11 shape — important stock per part for one nation's suppliers,
@@ -394,10 +396,11 @@ object TpchMore {
         .join(broadcast(t.nation.filter(col("n_name") === "NATION_5")),
           col("s_nationkey") === col("n_nationkey"))
         .groupBy(col("l_partkey").as("pk"))
-        .agg(sum(dec2(col("l_extendedprice"))).as("val"))
+        .agg(sumCents(col("l_extendedprice")).as("val"))
         .localCheckpoint()
       val threshold = ps.agg(
-        (sum(col("val")) * lit(BigDecimal("0.001"))).as("thr"))
+        (sumUnits(cents(col("val")), 2) * lit(BigDecimal("0.001")))
+          .as("thr"))
       ps.crossJoin(broadcast(threshold))
         .filter(col("val") > col("thr"))
         .select(col("pk"), col("val").cast("double").as("part_value"))
@@ -504,7 +507,7 @@ object TpchMore {
       // sets operator, now over 9 rows.
       val base = t.lineitem
         .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(sum(dec2(col("l_quantity"))).as("sq"),
+        .agg(sumCents(col("l_quantity")).as("sq"),
           count(lit(1)).as("cnt"))
       base.groupingSets(
           Seq(Seq(col("l_returnflag")), Seq(col("l_linestatus")),
@@ -512,7 +515,7 @@ object TpchMore {
           col("l_returnflag"), col("l_linestatus"))
         .agg(grouping(col("l_returnflag")).cast("int").as("g_flag"),
           grouping(col("l_linestatus")).cast("int").as("g_status"),
-          sum(col("sq")).cast("double").as("sum_qty"),
+          sum2(col("sq")).as("sum_qty"),
           sum(col("cnt")).as("n"))
     },
 

@@ -146,7 +146,7 @@ object Wave13 {
       tmp.createOrReplaceTempView("tmp_cust_orders")
       t.spark.table("tmp_cust_orders")
         .agg(count(lit(1)).as("n_total"),
-          sum(Exact.dec2(col("spend"))).as("s_total"))
+          Exact.sumCents(col("spend")).as("s_total"))
         .createOrReplaceGlobalTempView("gtmp_spend_cut")
       t.customer.createOrReplaceTempView("wave13_customer")
       t.spark.sql("""

@@ -253,8 +253,7 @@ object Wave17 {
       def base = t.orders
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n_orders"),
-          sum(col("o_totalprice").cast("decimal(18,2)")).cast("double")
-            .as("revenue"))
+          Exact.sum2(col("o_totalprice")).as("revenue"))
       def checked = AdminCheck.check(base, Dml.mvMerged(t),
         Seq("o_orderpriority"))
       val dir = Dml.mvDir(t) // built before it is corrupted
@@ -311,8 +310,7 @@ object Wave17 {
       def base = t.orders
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n_orders"),
-          sum(col("o_totalprice").cast("decimal(18,2)")).cast("double")
-            .as("revenue"))
+          Exact.sum2(col("o_totalprice")).as("revenue"))
       def checked = AdminCheck.check(base, Dml.mvMerged(t),
         Seq("o_orderpriority"))
       val dir = Dml.mvDir(t) // built before it is corrupted
@@ -385,8 +383,7 @@ object Wave17 {
       t.spark.read.parquet(root)
         .groupBy(col("oyear").cast("long").as("oyear"))
         .agg(count(lit(1)).as("n_orders"),
-          sum(col("o_totalprice").cast("decimal(18,2)")).cast("double")
-            .as("revenue"))
+          Exact.sum2(col("o_totalprice")).as("revenue"))
     },
   )
 

@@ -218,7 +218,7 @@ object Wave18 {
       def agg(df: org.apache.spark.sql.DataFrame, stage: String) =
         df.groupBy("o_orderstatus")
           .agg(count(lit(1)).as("cnt"),
-            sum(col("p")).cast("double").as("total"))
+            Exact.sum2(col("p")).as("total"))
           .select(lit(stage).as("stage"), col("o_orderstatus"),
             col("cnt"), col("total"))
       // COMMIT: the merged state becomes the next persisted snapshot

@@ -104,7 +104,7 @@ object Wave8 {
         .union(upd).union(ins)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("cnt"),
-          sum(col("p")).cast("double").as("total"))
+          Exact.sum2(col("p")).as("total"))
     },
 
     // ANALYZE TABLE (reference: executor/analyze.go + statistics/

@@ -104,8 +104,7 @@ object Wave9 {
       val base = t.orders
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n_orders"),
-          sum(col("o_totalprice").cast("decimal(18,2)")).cast("double")
-            .as("revenue"))
+          Exact.sum2(col("o_totalprice")).as("revenue"))
       AdminCheck.check(base, Dml.mvMerged(t), Seq("o_orderpriority"))
     },
 

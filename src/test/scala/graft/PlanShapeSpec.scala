@@ -1,10 +1,14 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Sum}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.types.DecimalType
+
 /** Plan-quality assertions: the scale story only holds if Catalyst
   * actually produces the intended physical shapes — pushed filters,
   * pruned scans, broadcast dims, fused TopN.
   */
-class PlanShapeSpec extends SparkSpecBase {
+class PlanShapeSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
 
   private def plan(name: String): String =
     Registry.all.find(_.name == name).get.run(t)
@@ -625,4 +629,33 @@ class PlanShapeSpec extends SparkSpecBase {
       assert(!p.contains("CartesianProduct"), s"cartesian in $name:\n$p")
     }
   }
+
+  test("money sums accumulate in longs: no SUM/AVG buffer wider than " +
+      "DECIMAL(18,x) in any entry routed through Exact") {
+    // A bare sum(dec2(x)) plans a DECIMAL(28,2)/(38,s) buffer, one
+    // BigDecimal add per row in the hash aggregate.
+    val wide = ExactEntries.flatMap { name =>
+      val p = Registry.byName(name).run(t).queryExecution.executedPlan
+      collectWithSubqueries(p) { case n => n }.flatMap(_.expressions)
+        .flatMap(_.collect { case a: AggregateExpression => a.aggregateFunction })
+        .collect { case f @ (_: Sum | _: Average) => f }
+        .flatMap(_.aggBufferAttributes.map(_.dataType))
+        .collect { case d: DecimalType if d.precision > 18 => s"$name: $d" }
+    }
+    assert(wide.isEmpty, wide.distinct.mkString("\n"))
+  }
+
+  /** Every entry whose DataFrame money sums go through `Exact`. */
+  private val ExactEntries = Seq(
+    "q_agg_hash", "q_join_broadcast", "q_join_shuffle", "q_join_merge",
+    "q_join_anti", "q_window_agg", "q_rollup", "q_cube",
+    "q_subquery_scalar", "q_tpch_q3", "q_window_range", "q_tpch_q10",
+    "q_tpch_q14", "q_tpch_q19", "q_tpch_q5", "q_tpch_q7", "q_tpch_q8",
+    "q_tpch_q18", "q_tpch_q22", "q_tpch_q9", "q_tpch_q6", "q_tpch_q11",
+    "q_groupingsets", "q_window_over_agg", "q_unpivot",
+    "q_scan_partition", "q_func_collate", "q_union_scan", "q_scd2_join",
+    "q_scan_partition_hash", "q_scan_partition_list", "q_generated_col",
+    "q_cached_table", "q_scan_partition_rangecol", "q_partition_mgmt",
+    "q_txn_rollback", "q_tpch_q1", "q_tpch_q17", "e_window_agg",
+    "e_attribution", "e_session_window", "e_range_join")
 }
