@@ -1,12 +1,16 @@
 package graft
 
+import scala.util.matching.Regex
+
 /** Dev tool for the optimization rounds: dump `.explain("formatted")`
   * for a comma-separated list of registry queries into an output
   * directory (one `<name>.txt` per query). Plan-only — the DataFrame
   * is built (including any lazy layout construction a query performs
   * while assembling its plan) but the final plan is not executed, so
   * a dump is cheap and safe to run beside nothing else. An unknown
-  * name throws.
+  * name throws. Plans are written [[normalize]]d, with the data dir
+  * shown as `<sfDir>`, so dumps of two checkouts compare with a plain
+  * `diff -r`.
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> name1,name2,...
   */
@@ -20,12 +24,30 @@ object PlanDump {
       try {
         java.nio.file.Files.write(
           java.nio.file.Paths.get(s"$outDir/${q.name}.txt"),
-          tools.Explain.formatted(q.name, t).getBytes("UTF-8"))
+          normalize(tools.Explain.formatted(q.name, t))
+            .replace(args(0), "<sfDir>").getBytes("UTF-8"))
         println(s"[plandump] wrote ${q.name}")
       } catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[plandump] ${q.name} FAILED: ${e.getMessage}")
       }
     }
     spark.stop()
+  }
+
+  /** `plan` without the numbers that differ between two runs of the
+    * same program: expression ids (`#12`), plan ids (`[plan_id=7]`)
+    * and RDD ids (`RDD[28]`) are renumbered in order of first
+    * appearance, so ids that are equal stay equal, and call-site line
+    * numbers (`at Graph.scala:214`) are dropped. */
+  def normalize(plan: String): String = {
+    def renumber(s: String, id: Regex, render: Int => String): String = {
+      val seen = scala.collection.mutable.Map.empty[String, Int]
+      id.replaceAllIn(s, m => Regex.quoteReplacement(
+        render(seen.getOrElseUpdate(m.group(1), seen.size + 1))))
+    }
+    val ids = renumber(plan, """#(\d+)""".r, n => s"#$n")
+    val plans = renumber(ids, """\[plan_id=(\d+)\]""".r, n => s"[plan_id=$n]")
+    renumber(plans, """RDD\[(\d+)\]""".r, n => s"RDD[$n]")
+      .replaceAll("""(\w\.scala):\d+""", "$1")
   }
 }

@@ -505,14 +505,10 @@ object CatalogQueries {
             (lit(0.15) + lit(0.85) * coalesce(col("c"), lit(0.0)))
               .as("rank"))
       }
-      // TWO relaxation rounds per checkpoint/job (the Graph.pageRank
-      // chaining): same co-partitioned round shape, half the |V|-row
-      // materializations across the six rounds.
-      var ranks = nodes.select(col("node"), lit(1.0).as("rank"))
-        .localCheckpoint()
-      for (_ <- 1 to 3)
-        ranks = prRound(prRound(ranks)).localCheckpoint()
-      ranks.select(col("node"), round(col("rank"), 6).as("rank"))
+      // Loop.rounds: two relaxation rounds per checkpoint/job (the
+      // Graph.pageRank chaining), half the |V|-row materializations.
+      Loop.rounds(nodes.select(col("node"), lit(1.0).as("rank")), 6)(prRound)
+        .select(col("node"), round(col("rank"), 6).as("rank"))
     },
 
     // Graph DML over the declared catalog — DELETE edges by

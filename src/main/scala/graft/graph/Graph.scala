@@ -175,15 +175,9 @@ final case class Graph(edges: DataFrame) {
           nullif(sum("md"), lit(0)).cast("double"), 6).as("closeness"))
   }
 
-  /** Frontiers below this row count expand TWO BFS levels per job
-    * (see [[shortestDistances]]): small enough that recomputing the
-    * unmaterialized first level inside the second level's plan is
-    * cheaper than an extra driver round + checkpoint. */
-  private val TwoHopFrontierMax = 10000L
-
   /** One BFS level: distinct unvisited neighbors of `frontier`,
-    * tagged `dist`. Alias-qualified join keys so the caller can chain
-    * two levels inside one lazy plan without ambiguous-attribute
+    * tagged `dist`. Alias-qualified join keys so [[Loop.levels]] can
+    * chain two levels inside one lazy plan without ambiguous-attribute
     * clashes against the shared edge table. */
   private def bfsLevel(e: DataFrame, frontier: DataFrame,
       visited: DataFrame, dist: Int): DataFrame =
@@ -195,107 +189,38 @@ final case class Graph(edges: DataFrame) {
 
   /** ANY SHORTEST analog (graph_shortest.go): minimal hop distance
     * from `source` to every node reachable within `maxHops`. Proper
-    * BFS — each level anti-joins the visited set, so a node's first
-    * (= minimal) level wins and the frontier shrinks monotonically.
-    * While the frontier is measured-small, TWO levels expand inside
-    * one lazy plan/job (level d+2 derives from the anti-joined level
-    * d+1 exactly as two sequential rounds would — identical result),
-    * halving driver-loop rounds on long thin traversals. */
+    * BFS on [[Loop.levels]] — each level anti-joins the visited set,
+    * so a node's first (= minimal) level wins and the frontier
+    * shrinks monotonically. */
   def shortestDistances(source: Long, direction: String,
       maxHops: Int): DataFrame = {
     val e = orientedCp(direction)
-    var visited = e.sparkSession.range(1)
-      .select(lit(source).as("node"), lit(0).as("dist"))
-      .cp()
-    var frontier = visited
-    var frontierN = 1L
-    var hopN = 0
-    var done = false
-    while (hopN < maxHops && !done) {
-      val twoHop = hopN + 2 <= maxHops && frontierN <= TwoHopFrontierMax
-      val l1 = bfsLevel(e, frontier, visited, hopN + 1)
-      val next = (if (!twoHop) l1 else {
-        val l2 = bfsLevel(e, l1,
-          visited.select("node").union(l1.select("node")), hopN + 2)
-        l1.union(l2)
-      }).cpLazy()
-      hopN += (if (twoHop) 2 else 1)
-      // ONE full-scan aggregate returns both loop scalars — total new
-      // nodes (empty ⇒ done) and the deepest level's size (the next
-      // frontier) — and materializes the lazy checkpoint in the same
-      // job. `visited` stays a LAZY union chain over the per-level
-      // cached frames (≤ maxHops arms, levels are disjoint by the
-      // anti-join): scanning the chain costs the same rows as the
-      // flattened copy the old per-round union checkpoint built, so
-      // that extra materialization job per level is gone.
-      val r = next.agg(count(lit(1)),
-        count(when(col("dist") === hopN, true))).head()
-      if (r.getLong(0) == 0L) done = true
-      else {
-        visited = visited.union(next)
-        // Only the deepest level seeds the next expansion; if the
-        // second hop of a batch came back empty the loop is done.
-        frontier = next.filter(col("dist") === hopN)
-        frontierN = r.getLong(1)
-        done = frontierN == 0
-      }
-    }
-    visited
+    Loop.levels(e.sparkSession.range(1)
+        .select(lit(source).as("node"), lit(0).as("dist")), maxHops)(
+      bfsLevel(e, _, _, _))
   }
 
   /** ALL SHORTEST analog (ast.GraphPathPatternTypeAllShortestPath):
     * per reachable node, the minimal hop distance AND the number of
     * distinct shortest paths. Level-synchronized BFS where the
     * frontier carries path counts — a node first reached at level d
-    * has count = Σ counts of its level-(d-1) predecessors. Counting
-    * stays fully distributed (groupBy dst + sum). */
+    * has count = Σ counts of its level-(d-1) predecessors, which is
+    * exactly the (anti-joined) previous frontier, so chaining two
+    * levels lazily is the same recurrence as two sequential rounds.
+    * Counting stays fully distributed (groupBy dst + sum). */
   def shortestPathCounts(source: Long, direction: String,
       maxHops: Int): DataFrame = {
     val e = orientedCp(direction)
-    var visited = e.sparkSession.range(1)
-      .select(lit(source).as("node"), lit(0).as("dist"),
-        lit(1L).as("n_paths"))
-      .cp()
-    // One counting level: a node first reached at depth d has
-    // n_paths = Σ n_paths of its depth-(d-1) predecessors — which is
-    // exactly the (anti-joined) previous frontier, so chaining two
-    // levels lazily is the same recurrence as two sequential rounds.
-    def level(frontier: DataFrame, vis: DataFrame, dist: Int): DataFrame =
+    Loop.levels(e.sparkSession.range(1)
+        .select(lit(source).as("node"), lit(0).as("dist"),
+          lit(1L).as("n_paths")), maxHops) { (frontier, vis, dist) =>
       frontier.select("node", "n_paths").as("f")
         .join(e.as("ed"), expr("f.node = ed.src"))
         .groupBy(col("ed.dst")).agg(sum(col("f.n_paths")).as("n_paths"))
         .join(vis.select(col("node").as("dst")), Seq("dst"), "left_anti")
         .select(col("dst").as("node"), lit(dist).as("dist"),
           col("n_paths"))
-    var frontier = visited
-    var frontierN = 1L
-    var hopN = 0
-    var done = false
-    while (hopN < maxHops && !done) {
-      // Same two-hop batching as shortestDistances: halve driver
-      // rounds while the frontier is measured-small.
-      val twoHop = hopN + 2 <= maxHops && frontierN <= TwoHopFrontierMax
-      val l1 = level(frontier, visited, hopN + 1)
-      val next = (if (!twoHop) l1 else {
-        val l2 = level(l1,
-          visited.select("node").union(l1.select("node")), hopN + 2)
-        l1.union(l2)
-      }).cpLazy()
-      hopN += (if (twoHop) 2 else 1)
-      // Same one-job fold as shortestDistances: the scalar aggregate
-      // materializes the lazy checkpoint; visited stays a lazy union
-      // chain over the disjoint cached levels.
-      val r = next.agg(count(lit(1)),
-        count(when(col("dist") === hopN, true))).head()
-      if (r.getLong(0) == 0L) done = true
-      else {
-        visited = visited.union(next)
-        frontier = next.filter(col("dist") === hopN)
-        frontierN = r.getLong(1)
-        done = frontierN == 0
-      }
     }
-    visited
   }
 
   /** Weighted shortest distance (Bellman-Ford relaxation, bounded to
@@ -312,35 +237,20 @@ final case class Graph(edges: DataFrame) {
   def weightedShortest(wedges: DataFrame, source: Long,
       maxHops: Int): DataFrame = {
     val we = wedges.cp()
-    var dist = wedges.sparkSession.range(1)
-      .select(lit(source).as("node"), lit(0L).as("wdist"))
-      .cp()
     // Tentative distances only ever (a) add nodes or (b) decrease, so
     // the (row count, distance sum) pair is a strictly improving
     // convergence measure: once stable, every later round is a no-op
-    // and the loop stops early (same early-stop idea as
-    // connectedComponents' label sum).
-    var prev = (-1L, -1L)
-    var hopN = 0
-    while (hopN < maxHops && {
-        val r = dist.agg(count(lit(1)), sum(col("wdist"))).head()
-        val cur = (r.getLong(0), r.getLong(1))
-        val improving = cur != prev
-        prev = cur
-        improving
-      }) {
-      hopN += 1
-      val relaxed = dist.join(we, dist("node") === we("src"))
-        .select(col("dst").as("node"), (col("wdist") + col("w")).as("wdist"))
-      // Lazy checkpoint: the loop condition's convergence aggregate
-      // (or, after the final hop, the caller's own action) is the
-      // full scan that materializes each round's state — one job per
-      // round instead of two.
-      dist = dist.union(relaxed)
+    // and the loop stops early.
+    Loop.untilStable(wedges.sparkSession.range(1)
+        .select(lit(source).as("node"), lit(0L).as("wdist")).cpLazy(),
+        maxHops) { dist =>
+      dist.union(dist.join(we, dist("node") === we("src"))
+          .select(col("dst").as("node"), (col("wdist") + col("w")).as("wdist")))
         .groupBy("node").agg(min(col("wdist")).as("wdist"))
-        .cpLazy()
-    }
-    dist
+    } { dist =>
+      val r = dist.agg(count(lit(1)), sum(col("wdist"))).head()
+      (r.getLong(0), r.getLong(1))
+    }.state
   }
 
   /** PageRank, fixed iteration count, non-normalized convention
@@ -351,23 +261,12 @@ final case class Graph(edges: DataFrame) {
     * cannot surface. */
   def pageRank(iters: Int, damping: Double = 0.85): DataFrame = {
     val (edeg, nodes, init) = pageRankState()
-    // TWO rounds chain per checkpoint/job (the connectedComponents
-    // trick): the edge side of both rounds' joins is the same
-    // pre-partitioned checkpoint, so the lazy two-round plan is
-    // co-partitioned joins + aggs only and the |V|-row state
-    // materializes half as often. A FULLY unrolled plan measured
-    // slower (see pageRankState); the pairwise chain keeps jobs
-    // shallow while halving the scheduling.
-    var ranks = init
-    var i = 0
-    while (i + 2 <= iters) {
-      ranks = pageRankRound(edeg, nodes,
-        pageRankRound(edeg, nodes, ranks, damping), damping).cp()
-      i += 2
-    }
-    if (i < iters)
-      ranks = pageRankRound(edeg, nodes, ranks, damping).cp()
-    ranks.select(col("node"), round(col("rank"), 6).as("rank"))
+    // Two rounds per checkpoint (Loop.rounds): the edge side of both
+    // rounds' joins is the same pre-partitioned checkpoint, so the
+    // lazy two-round plan is co-partitioned joins + aggs only. A
+    // FULLY unrolled plan measured slower (see pageRankState).
+    Loop.rounds(init, iters)(pageRankRound(edeg, nodes, _, damping))
+      .select(col("node"), round(col("rank"), 6).as("rank"))
   }
 
   /** The loop inputs: fused (src, dst, deg) edge table hash-
@@ -456,13 +355,9 @@ final case class Graph(edges: DataFrame) {
           (lit(1.0 - damping) * col("seed") +
             lit(damping) * coalesce(col("c"), lit(0.0))).as("rank"))
     }
-    // TWO rounds per checkpoint/job, like pageRank above — same
-    // co-partitioned round shape, half the |V|-row materializations.
-    var ranks = flagged.select(col("node"), col("seed").as("rank"))
-    var i = 0
-    while (i + 2 <= iters) { ranks = pprRound(pprRound(ranks)).cp(); i += 2 }
-    if (i < iters) ranks = pprRound(ranks).cp()
-    ranks.filter(col("rank") > 0)
+    Loop.rounds(flagged.select(col("node"), col("seed").as("rank")),
+        iters)(pprRound)
+      .filter(col("rank") > 0)
       .select(col("node"), round(col("rank"), 6).as("rank"))
   }
 
@@ -518,103 +413,12 @@ final case class Graph(edges: DataFrame) {
   def connectedComponents(): DataFrame =
     connectedComponentsWithStats()._1
 
-  /** Adaptive CC kernel: plain min-label propagation, with pointer-
-    * jumping label compression (`component := component(component)`)
-    * enabled ONLY when the measured convergence rate says the graph
-    * is diameter-bound. The r15 A/B showed compression helps sparse
-    * long-chain graphs (rounds ~ diameter without it) but is pure
-    * overhead on dense graphs that converge in ~2 cycles — so the
-    * decision is taken from the label-sum trajectory itself, not a
-    * static flag: after each 2-round cycle the per-cycle decrease
-    * d_k is compared to d_{k-1}; a dense graph's decrease collapses
-    * geometrically (d_k < d_{k-1}/8 → it is about to converge, leave
-    * compression off), while a chain-like graph keeps resolving
-    * labels at a near-constant rate (d_k >= d_{k-1}/8 after cycle 2
-    * → remaining work is diameter-bound, turn compression on for all
-    * subsequent cycles). The rate cut is 1/8, not the r16 1/4: a
-    * mixed graph (one big near-converged blob + sparse chains — the
-    * catalog shape) sees its first-cycle decrease dominated by the
-    * blob, so the chain signal at the cycle-2 test reads as a
-    * 1/8-to-1/4 fraction and the 1/4 rule burned one extra plain
-    * cycle before engaging (r17 A/B at sf0.1, back-to-back in one
-    * window: g_catalog_components 5.75 → 4.98/5.05 with controls
-    * flat; g_cc converges before the test ever fires under either
-    * cut, so dense graphs are unaffected by construction).
-    * Compression is exact: labels only ever
-    * decrease and label values are node ids, so re-reading the
-    * label's own current label is monotone and preserves the
-    * fixpoint; it turns O(diameter) cycles into O(log diameter).
-    * Returns (labels, CcStats) so specs can pin the adaptive
-    * decision on constructed chain/dense graphs. */
-  def connectedComponentsWithStats(): (DataFrame, Graph.CcStats) = {
-    val und = bothCp
-    // Lazy checkpoints throughout this loop: every materialization
-    // point is immediately followed by the label-sum scalar, whose
-    // job computes AND caches the state — one job per cycle instead
-    // of a checkpoint job plus a cached re-scan (§5 driver
-    // round-trips; the fixpoint and labels are unchanged).
-    var labels = und.select(col("src").as("node"))
-      .distinct()
-      .select(col("node"), col("node").as("component"))
-      .cpLazy()
-    // One min-label propagation round; alias-qualified so two rounds
-    // can chain inside one lazy plan (the inner round's aggregation
-    // exchange is reused by Spark's ReuseExchange across its two
-    // consumers).
-    def round(l: DataFrame): DataFrame =
-      l.as("L").join(und.as("E"), expr("L.node = E.src"))
-        .select(col("E.dst").as("node"), col("L.component").as("component"))
-        .union(l)
-        .groupBy("node").agg(min(col("component")).as("component"))
-    // Pointer jumping: every node re-reads the current label OF its
-    // label node. Left join (not inner) — a component-minimum node
-    // labels itself, and self-rows survive either way, but left keeps
-    // the invariant obvious: no row is ever dropped. Applied to the
-    // MATERIALIZED state (labels is always cp'd), before the cycle's
-    // propagation rounds — self-joining the lazy two-round plan
-    // instead trips Catalyst's union constraint rewrite, and the
-    // fixpoint is the same whichever side of the rounds the jump
-    // runs on (both operators are monotone non-increasing).
-    def compress(l: DataFrame): DataFrame =
-      l.as("A")
-        .join(l.select(col("node").as("cn"), col("component").as("cc")),
-          col("A.component") === col("cn"), "left")
-        .select(col("A.node").as("node"),
-          coalesce(col("cc"), col("A.component")).as("component"))
-    // Labels only ever decrease, so the label sum is a strictly
-    // decreasing convergence measure — one cheap scalar aggregate per
-    // materialization instead of a join/except against the previous
-    // state. TWO rounds run per job/checkpoint (the same fixpoint is
-    // reached — propagation is monotone — with half the driver
-    // scheduling; the sum check just observes every second round).
-    var prevSum = labels.agg(sum(col("component"))).head().getLong(0)
-    var prevDec = -1L
-    var cycles = 0
-    var compressFrom = -1
-    var converged = false
-    while (!converged) {
-      cycles += 1
-      val compressing = compressFrom > 0
-      val next =
-        round(round(if (compressing) compress(labels) else labels)).cpLazy()
-      val nextSum = next.agg(sum(col("component"))).head().getLong(0)
-      val dec = prevSum - nextSum
-      converged = dec == 0L
-      // Rate test (re-evaluated each cycle until it fires, so the
-      // earliest it can enable compression is cycle 3 — after two
-      // plain cycles): still resolving at >= 1/8 the previous
-      // cycle's rate means the remaining structure is chain-like
-      // (diameter-bound), so every later cycle gets the extra
-      // compression join. Once on, it stays on.
-      if (!converged && compressFrom < 0 && prevDec > 0 &&
-          dec * 8L >= prevDec)
-        compressFrom = cycles + 1
-      prevDec = dec
-      prevSum = nextSum
-      labels = next
-    }
-    (labels, Graph.CcStats(cycles, compressFrom))
-  }
+  /** [[connectedComponents]] with its convergence trace: the adaptive
+    * min-label kernel [[Graph.minLabels]] over the BOTH orientation.
+    * Returns (labels, CcStats) so specs can pin the adaptive decision
+    * on constructed chain/dense graphs. */
+  def connectedComponentsWithStats(): (DataFrame, Graph.CcStats) =
+    Graph.minLabels(bothCp.select(col("src").as("node")).distinct(), bothCp)
 
   /** Bounded-depth Brandes dependency scores from pinned roots — the
     * betweenness-centrality core (who sits on the shortest paths;
@@ -756,22 +560,15 @@ final case class Graph(edges: DataFrame) {
     * need the undirected edges themselves (g_modularity's within-
     * community count) pass theirs in so the derived-edge build runs
     * ONCE, not once per consumer. */
-  def labelPropagation(iters: Int, undPre: DataFrame): DataFrame = {
-    val und = undPre
+  def labelPropagation(iters: Int, und: DataFrame): DataFrame = {
     def round(l: DataFrame): DataFrame =
       und.as("E").join(l.as("L"), expr("E.dst = L.node"))
         .groupBy(col("E.src").as("node"), col("L.lbl").as("lbl"))
         .agg(count(lit(1)).as("cnt"))
         .groupBy("node")
         .agg(expr("min_by(lbl, struct(-cnt, lbl))").as("lbl"))
-    var labels = und.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("lbl"))
-    // TWO synchronous rounds chain per checkpoint/job (same labels,
-    // half the scheduling — the connectedComponents trick).
-    var i = 0
-    while (i + 2 <= iters) { labels = round(round(labels)).cp(); i += 2 }
-    if (i < iters) labels = round(labels).cp()
-    labels
+    Loop.rounds(und.select(col("src").as("node")).distinct()
+      .select(col("node"), col("node").as("lbl")), iters)(round)
   }
 
   /** Strongly connected components of the DIRECTED graph — CC's
@@ -783,14 +580,14 @@ final case class Graph(edges: DataFrame) {
     * coloring, the FW-BW/coloring family of the distributed-SCC
     * literature re-expressed as DataFrame loops:
     *
-    *  1. TRIM: a node with no in-edge or no out-edge in the live
-    *     subgraph can't sit on a cycle → singleton SCC; peel to
-    *     fixpoint (each round = one degree agg + two semi-joins,
-    *     |E|-bounded like kCore's peel).
-    *  2. COLOR: propagate the min node id FORWARD along edges to a
-    *     fixpoint (directed twin of connectedComponents' loop), and
-    *     BACKWARD along reversed edges. F(v) = min over ancestors
-    *     ∪ {v}, B(v) = min over descendants ∪ {v}.
+    *  1. TRIM: an edge whose end has no in-edge or no out-edge in the
+    *     live subgraph can't sit on a cycle; peel such edges to a
+    *     stable live-edge count ([[Loop.untilStable]]; each cycle =
+    *     one degree-flag agg + two semi-joins, |E|-bounded like
+    *     kCore's peel). A node left without live edges is a singleton.
+    *  2. COLOR: [[Graph.minLabels]] — CC's kernel — FORWARD along the
+    *     live edges and BACKWARD along the reversed ones. F(v) = min
+    *     over ancestors ∪ {v}, B(v) = min over descendants ∪ {v}.
     *  3. EXTRACT: F(v) = B(v) = c means c reaches v AND v reaches c
     *     → SCC(c) found (all of SCC(c) satisfies it, since members
     *     share ancestor and descendant sets). The SCC of the
@@ -798,100 +595,62 @@ final case class Graph(edges: DataFrame) {
     *     round removes ≥ 1 SCC — termination is guaranteed, and on
     *     the dense derived graphs the giant SCC falls in round one.
     *
-    * State is one (node, label) row per live vertex; every loop body
-    * is map-combined aggs + co-partitioned joins, nothing wider than
-    * an edge shuffles, and the only driver-side values are the
-    * convergence scalars — same contract as the other graph loops.
-    * Deterministic (min is order-free) → exactly reproducible by the
-    * transitive-closure oracle. */
+    * Every node no round extracts is a singleton. State is one
+    * (node, label) row per live vertex plus the live edges; every
+    * loop body is map-combined aggs + co-partitioned joins, nothing
+    * wider than an edge shuffles, and the only driver-side values are
+    * the convergence scalars — same contract as the other graph
+    * loops. Deterministic (min is order-free) → exactly reproducible
+    * by the transitive-closure oracle. */
   def stronglyConnectedComponents(): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
+    def ends(e: DataFrame): DataFrame = e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct()
+    // One trim cycle: keep the edges whose two ends both have an in-
+    // and an out-edge in `l` — ONE map-combined flag aggregate over
+    // the edge ends.
+    def trim(l: DataFrame): DataFrame = {
+      val cyclic = l.select(col("src").as("node"), lit(1).as("o"),
+          lit(0).as("i"))
+        .unionByName(l.select(col("dst").as("node"), lit(0).as("o"),
+          lit(1).as("i")))
+        .groupBy("node").agg(max("o").as("o"), max("i").as("i"))
+        .filter(col("o") === 1 && col("i") === 1)
+      l.join(cyclic.select(col("node").as("src")), Seq("src"), "left_semi")
+        .join(cyclic.select(col("node").as("dst")), Seq("dst"), "left_semi")
+    }
     // Start from the per-instance distinct-edge checkpoint: with
     // Graph.derived memoizing instances, repeated SCC runs (and any
     // other distinct-edge consumer) share ONE materialization.
     var live = distinctCp
-    var result: DataFrame = Seq.empty[(Long, Long)].toDF("node", "scc")
-    // Lazy checkpoints on every state whose next driver action is a
-    // full-scan scalar (count / label sum): that action's job
-    // materializes the blocks — one job per step instead of two.
-    // `live` keeps the EAGER cp: its next consumer is a plan that
-    // references it twice (both edge ends), which would race to
-    // compute an unmaterialized subtree.
-    var nodes = live.select(col("src").as("node"))
-      .union(live.select(col("dst").as("node"))).distinct().cpLazy()
-    var nLive = nodes.count()
-    while (nLive > 0) {
-      // 1. trim to fixpoint. "Has both an in- and an out-edge" is ONE
-      // map-combined flag aggregate over the edge ends — the earlier
-      // distinct-∩-distinct spelling planned as two full aggregates
-      // plus the set-op's own exchange (three shuffles per peel
-      // round) for the same answer.
-      var trimming = true
-      while (trimming && nLive > 0) {
-        val both = live.select(col("src").as("node"), lit(1).as("o"),
-            lit(0).as("i"))
-          .unionByName(live.select(col("dst").as("node"), lit(0).as("o"),
-            lit(1).as("i")))
-          .groupBy("node").agg(max("o").as("o"), max("i").as("i"))
-          .filter(col("o") === 1 && col("i") === 1)
-          .select("node")
-        val keep = nodes.join(both, Seq("node"), "left_semi").cpLazy()
-        val nKeep = keep.count()
-        if (nKeep == nLive) trimming = false
-        else {
-          result = result.union(nodes.join(both, Seq("node"), "left_anti")
-            .select(col("node"), col("node").as("scc")))
-          nodes = keep
-          live = live
-            .join(nodes.select(col("node").as("src")), Seq("src"), "left_semi")
-            .join(nodes.select(col("node").as("dst")), Seq("dst"), "left_semi")
-            .cp()
-          nLive = nKeep
-        }
-      }
-      if (nLive > 0) {
-        // 2. min-label coloring, both directions
-        def minReach(e: DataFrame): DataFrame = {
-          def round(l: DataFrame): DataFrame =
-            l.as("L").join(e.as("E"), expr("L.node = E.src"))
-              .select(col("E.dst").as("node"), col("L.m").as("m"))
-              .union(l)
-              .groupBy("node").agg(min("m").as("m"))
-          var lbl = nodes.select(col("node"), col("node").as("m"))
-          var prevSum = lbl.agg(sum("m")).head().getLong(0)
-          var done = false
-          // Two rounds per job: min-propagation is monotone, so the
-          // fixpoint (and the sum test observing every second round)
-          // is unchanged — half the driver scheduling.
-          while (!done) {
-            val next = round(round(lbl)).cpLazy()
-            val s = next.agg(sum("m")).head().getLong(0)
-            done = s == prevSum; prevSum = s; lbl = next
-          }
-          lbl
-        }
-        val f = minReach(live)
-        val b = minReach(live.select(col("dst").as("src"),
-          col("src").as("dst")))
-        val found = f.join(b.withColumnRenamed("m", "mb"), "node")
-          .filter(col("m") === col("mb"))
-          .select(col("node"), col("m").as("scc")).cpLazy()
-        result = result.union(found)
-        nodes = nodes.join(found.select("node"), Seq("node"), "left_anti")
-          .cpLazy()
-        // Count BEFORE the live rebuild: this one job materializes
-        // found AND nodes, and live's eager cp then reads both from
-        // cache (live itself references nodes twice, so it keeps the
-        // eager form — see the loop-head comment).
-        nLive = nodes.count()
+    var found = Vector.empty[DataFrame]
+    var more = true
+    while (more) {
+      val trimmed = Loop.untilStable(live, Int.MaxValue)(trim)(_.count())
+      live = trimmed.state
+      more = trimmed.last > 0
+      if (more) {
+        // Lazy: the forward colouring's first label sum materializes
+        // the node set, and the backward one reads it from cache.
+        val nodes = ends(live).cpLazy()
+        val f = Graph.minLabels(nodes, live)._1
+        val b = Graph.minLabels(nodes,
+          live.select(col("dst").as("src"), col("src").as("dst")))._1
+        val scc = f.join(b.withColumnRenamed("component", "mb"), "node")
+          .filter(col("component") === col("mb"))
+          .select(col("node"), col("component").as("scc")).cpLazy()
+        found :+= scc
+        // The next trim's first count materializes scc AND the pruned
+        // edges in one job.
         live = live
-          .join(nodes.select(col("node").as("src")), Seq("src"), "left_semi")
-          .join(nodes.select(col("node").as("dst")), Seq("dst"), "left_semi")
-          .cp()
+          .join(scc.select(col("node").as("src")), Seq("src"), "left_anti")
+          .join(scc.select(col("node").as("dst")), Seq("dst"), "left_anti")
+          .cpLazy()
       }
     }
-    result
+    val singletons = found.foldLeft(ends(distinctCp))(
+      (n, scc) => n.join(scc.select("node"), Seq("node"), "left_anti"))
+      .select(col("node"), col("node").as("scc"))
+    found.foldLeft(singletons)(_ union _)
   }
 
   /** k-core: the maximal subgraph where every vertex keeps at least k
@@ -905,29 +664,16 @@ final case class Graph(edges: DataFrame) {
     * edge list: one map-combined degree agg + two co-partitioned
     * semi-joins, |E|-bounded — the standard distributed peel, no
     * driver-side data beyond the one convergence scalar. */
-  def kCore(k: Int, maxRounds: Int): DataFrame = {
-    var edges = bothCp
-    var prevN = edges.select("src").distinct().count()
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
+  def kCore(k: Int, maxRounds: Int): DataFrame =
+    Loop.untilStable(bothCp, maxRounds) { edges =>
       val keep = edges.groupBy("src").agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select("src")
-      // Lazy checkpoint: the survivor-count job below full-scans the
-      // pruned edges, materializing them in the same job (§5).
-      val pruned = edges
+      edges
         .join(keep, Seq("src"), "left_semi")
         .join(keep.withColumnRenamed("src", "dst"), Seq("dst"), "left_semi")
-        .cpLazy()
-      val n = pruned.select("src").distinct().count()
-      converged = n == prevN
-      prevN = n
-      edges = pruned
-      rounds += 1
-    }
-    edges.groupBy("src").agg(count(lit(1)).as("deg"))
+    } (_.select("src").distinct().count())
+      .state.groupBy("src").agg(count(lit(1)).as("deg"))
       .select(col("src").as("node"), col("deg"))
-  }
 
   /** k-truss: the maximal subgraph in which every EDGE sits in at
     * least k−2 triangles — the edge-level cohesion test beside
@@ -953,41 +699,26 @@ final case class Graph(edges: DataFrame) {
     // collected to a bounded driver set (only over-cap vertices —
     // see Graph.edgeSupports), so hub-free graphs get the lean
     // array-only per-round plan with no broadcast machinery in it.
-    var e = canonCp
+    val e = canonCp
     val spark = e.sparkSession
     import spark.implicits._
     val hubIds = Graph.hubVertices(e, degreeCap)
       .collect().map(_.getLong(0)).toSeq
     val hubs = hubIds.toDF("n")
     val hasHubs = hubIds.nonEmpty
-    var prevN = e.count()
-    var rounds = 0
-    var converged = prevN == 0
-    // At fixpoint the survivor set is unchanged, so the support
-    // computed over the PRE-prune set is already the final support —
-    // carry it instead of re-enumerating after the loop.
-    var lastSup: Option[DataFrame] = None
-    while (!converged && rounds < maxRounds) {
-      // Lazy checkpoint: the kept-count below scans every support row
-      // (the filter is evaluated over the full frame), so one job
-      // materializes the round's supports and counts survivors.
-      val sup = Graph.edgeSupportsWith(e, hubs, hasHubs).cpLazy()
-      val kept = sup.filter(col("sup") >= k - 2)
-      val n = kept.count()
-      converged = n == prevN
-      prevN = n
-      e = kept.select("src", "dst")
-      lastSup = Some(kept)
-      rounds += 1
-    }
-    lastSup match {
-      case Some(s) if converged => s.select("src", "dst", "sup")
-      // Non-converged (maxRounds-exhausted) exit: the final recompute
-      // must drop zero-support survivors — the oracle's closing wedge
-      // recount is an inner join, which omits them by construction.
-      case _ => Graph.edgeSupportsWith(e, hubs, hasHubs).filter(col("sup") >= 1)
-        .select("src", "dst", "sup")
-    }
+    def supports(s: DataFrame): DataFrame =
+      Graph.edgeSupportsWith(s.select("src", "dst"), hubs, hasHubs)
+    // The state is the survivor set with its support over the
+    // PRE-prune set; at the fixpoint that set is unchanged, so the
+    // carried support is already the final one.
+    val r = Loop.untilStable(e, maxRounds)(
+      supports(_).filter(col("sup") >= k - 2))(_.count())
+    if (r.converged) r.state.select("src", "dst", "sup")
+    // Bound-exhausted exit: the final recompute must drop zero-support
+    // survivors — the oracle's closing wedge recount is an inner join,
+    // which omits them by construction.
+    else supports(r.state).filter(col("sup") >= 1)
+      .select("src", "dst", "sup")
   }
 
   /** TOP-K SHORTEST path enumeration, ranked by (length, path) —
@@ -1077,6 +808,91 @@ object Graph {
     * label compression enabled, or -1 if the decrease-rate test
     * classified the graph as dense and compression never ran. */
   final case class CcStats(cycles: Int, compressFrom: Int)
+
+  /** Adaptive min-label kernel over a node set and a DIRECTED edge
+    * frame `e` (src, dst): every node ends labelled with the minimum
+    * node id among its ancestors and itself. Over both orientations
+    * that is connected components; SCC colours with it per direction.
+    * Plain min-label propagation, with pointer-
+    * jumping label compression (`component := component(component)`)
+    * enabled ONLY when the measured convergence rate says the graph
+    * is diameter-bound. The r15 A/B showed compression helps sparse
+    * long-chain graphs (rounds ~ diameter without it) but is pure
+    * overhead on dense graphs that converge in ~2 cycles — so the
+    * decision is taken from the label-sum trajectory itself, not a
+    * static flag: after each 2-round cycle the per-cycle decrease
+    * d_k is compared to d_{k-1}; a dense graph's decrease collapses
+    * geometrically (d_k < d_{k-1}/8 → it is about to converge, leave
+    * compression off), while a chain-like graph keeps resolving
+    * labels at a near-constant rate (d_k >= d_{k-1}/8 after cycle 2
+    * → remaining work is diameter-bound, turn compression on for all
+    * subsequent cycles). The rate cut is 1/8, not the r16 1/4: a
+    * mixed graph (one big near-converged blob + sparse chains — the
+    * catalog shape) sees its first-cycle decrease dominated by the
+    * blob, so the chain signal at the cycle-2 test reads as a
+    * 1/8-to-1/4 fraction and the 1/4 rule burned one extra plain
+    * cycle before engaging (r17 A/B at sf0.1, back-to-back in one
+    * window: g_catalog_components 5.75 → 4.98/5.05 with controls
+    * flat; g_cc converges before the test ever fires under either
+    * cut, so dense graphs are unaffected by construction).
+    * Compression is exact: labels only ever decrease, and a label is
+    * the id of an ancestor (or the node itself), whose own label is
+    * an ancestor of it in turn — so re-reading the label's label is
+    * monotone and preserves the min-ancestor fixpoint, directed or
+    * not; it turns O(diameter) cycles into O(log diameter). The loop
+    * is [[Loop.untilStable]] on the label sum (labels only decrease,
+    * so a repeated sum is the fixpoint), two propagation rounds per
+    * cycle. */
+  private[graft] def minLabels(nodes: DataFrame,
+      e: DataFrame): (DataFrame, CcStats) = {
+    // One min-label propagation round; alias-qualified so two rounds
+    // can chain inside one lazy plan (the inner round's aggregation
+    // exchange is reused by Spark's ReuseExchange across its two
+    // consumers).
+    def round(l: DataFrame): DataFrame =
+      l.as("L").join(e.as("E"), expr("L.node = E.src"))
+        .select(col("E.dst").as("node"), col("L.component").as("component"))
+        .union(l)
+        .groupBy("node").agg(min(col("component")).as("component"))
+    // Pointer jumping: every node re-reads the current label OF its
+    // label node. Left join (not inner) — a minimum node labels
+    // itself, and self-rows survive either way, but left keeps the
+    // invariant obvious: no row is ever dropped. Applied to the
+    // MATERIALIZED state, before the cycle's propagation rounds —
+    // self-joining the lazy two-round plan instead trips Catalyst's
+    // union constraint rewrite, and the fixpoint is the same whichever
+    // side of the rounds the jump runs on (both operators are
+    // monotone non-increasing).
+    def compress(l: DataFrame): DataFrame =
+      l.as("A")
+        .join(l.select(col("node").as("cn"), col("component").as("cc")),
+          col("A.component") === col("cn"), "left")
+        .select(col("A.node").as("node"),
+          coalesce(col("cc"), col("A.component")).as("component"))
+    // sums(0) is the initial label sum, sums(k) the sum after cycle k.
+    val sums = scala.collection.mutable.ArrayBuffer.empty[Long]
+    var compressFrom = -1
+    val r = Loop.untilStable(graft.tools.Reliable.cpLazy(
+        nodes.select(col("node"), col("node").as("component"))),
+        Int.MaxValue) { labels =>
+      // Rate test before cycle n, on the decreases of cycles n-1 and
+      // n-2 (so the earliest it can enable compression is cycle 3):
+      // still resolving at >= 1/8 the previous cycle's rate means the
+      // remaining structure is chain-like (diameter-bound), so this
+      // and every later cycle gets the extra compression join.
+      val n = sums.size
+      if (compressFrom < 0 && n >= 3) {
+        val prevDec = sums(n - 3) - sums(n - 2)
+        if (prevDec > 0 && (sums(n - 2) - sums(n - 1)) * 8L >= prevDec)
+          compressFrom = n
+      }
+      round(round(if (compressFrom > 0) compress(labels) else labels))
+    } { labels =>
+      sums += labels.agg(sum(col("component"))).head().getLong(0)
+      sums.last
+    }
+    (r.state, CcStats(r.cycles, compressFrom))
+  }
 
   /** Per-JVM memo of derived Graph instances, keyed by (session,
     * semantic hash of the input plan) — the SampleStats.boundsRow
@@ -1274,9 +1090,10 @@ object Graph {
     // at cluster scale EnsureRequirements shuffles the smaller side),
     // so an upfront repartition of the 2|E| rows is paid once and
     // saves nothing per round — measured as a mild regression.
-    val und = undirect(e).localCheckpoint()
-    var c = und.groupBy("n").agg(count(lit(1)).as("c")).localCheckpoint()
-    val degs = c.select(col("n"), col("c").as("deg"))
+    val und = graft.tools.Reliable.cp(undirect(e))
+    // Lazy: the loop's first estimate sum materializes the degrees.
+    val c0 = graft.tools.Reliable.cpLazy(
+      und.groupBy("n").agg(count(lit(1)).as("c")))
     // h-index without ranking the raw edge ends: h = max over the
     // OBSERVED estimate values c of min(c, |{u : c(u) ≥ c}|) — the
     // standard identity (taking c = the h-th largest value attains
@@ -1302,43 +1119,27 @@ object Graph {
              a -> a.best)""").as("c"))
     // Estimates are positive and per-vertex MONOTONE NON-INCREASING,
     // so Σc strictly decreases until the fixpoint — one cheap scalar
-    // aggregate per materialization instead of a join/diff against
-    // the previous state, and TWO rounds chain per job/checkpoint
-    // (the connectedComponents trick: the fixpoint is idempotent, so
-    // an extra round past convergence changes nothing while halving
-    // the driver scheduling on the way there — the loop's cost at
-    // this graph size IS the materialization count).
-    // SUM over zero rows is NULL — fold it to 0 so an empty edge set
-    // converges on the first check instead of NPE-ing.
+    // aggregate per cycle instead of a join/diff against the previous
+    // state. SUM over zero rows is NULL — fold it to 0 so an empty
+    // edge set converges on the first check instead of NPE-ing.
     def estSum(df: DataFrame): Long = {
       val r = df.agg(sum(col("c"))).head()
       if (r.isNullAt(0)) 0L else r.getLong(0)
     }
-    var rounds = 0
-    var prevSum = estSum(c)
-    var converged = false
-    // Chain TWO h-index rounds per materialization — the fixpoint is
-    // idempotent, so an extra round past convergence changes nothing
-    // while the loop's cost at this graph size IS the
-    // materialization count (the r17 A/B measured FOUR-round chaining
-    // as no further gain, so two is the shipped budget unit). The
-    // budget floor keeps tiny maxRounds
-    // refining instead of returning raw degrees as "coreness", and
-    // round-down stays the safe direction: an UNDER-run past the
-    // converged gate only happens pre-fixpoint where the estimates
-    // are still upper bounds either way.
-    val budget = math.max(maxRounds - maxRounds % 2, 2)
-    while (!converged && rounds + 2 <= budget) {
-      // Lazy checkpoint: estSum's aggregate job materializes the
-      // round's estimates — one job per cycle instead of two (§5).
-      val next = round(round(c)).localCheckpoint(false)
-      val nextSum = estSum(next)
-      converged = nextSum == prevSum
-      prevSum = nextSum
-      c = next
-      rounds += 2
-    }
-    degs.join(c.withColumnRenamed("c", "coreness"), "n")
+    // Chain TWO h-index rounds per cycle — the fixpoint is idempotent,
+    // so an extra round past convergence changes nothing while the
+    // loop's cost at this graph size IS the materialization count (the
+    // r17 A/B measured FOUR-round chaining as no further gain, so two
+    // is the shipped budget unit). The floor of one cycle keeps tiny
+    // maxRounds refining instead of returning raw degrees as
+    // "coreness", and rounding the budget down stays the safe
+    // direction: an UNDER-run past the converged gate only happens
+    // pre-fixpoint where the estimates are still upper bounds either
+    // way.
+    val c = Loop.untilStable(c0, math.max(maxRounds / 2, 1))(
+      cur => round(round(cur)))(estSum).state
+    c0.select(col("n"), col("c").as("deg"))
+      .join(c.withColumnRenamed("c", "coreness"), "n")
   }
 
   /** One-shot per-edge support: ONE bounded adjacency exchange serves

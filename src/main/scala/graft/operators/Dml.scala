@@ -389,11 +389,14 @@ object Dml {
   )
 
   /** Pre-aggregated partial of `orders` per priority — the MV's
-    * snapshot and its delta share one definition. */
+    * snapshot and its delta share one definition. `rev` sums on long
+    * accumulators (`Exact.sumCents`) but keeps Spark's DECIMAL(28,2)
+    * type for `sum(dec2(x))`, so the persisted snapshot's schema and
+    * values are those of the plain decimal sum. */
   private def mvPartial(df: org.apache.spark.sql.DataFrame) =
     df.groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n_orders"),
-        sum(col("o_totalprice").cast("decimal(18,2)")).as("rev"))
+        Exact.sumCents(col("o_totalprice")).as("rev"))
 
   private val mvSplit = "1997-01-01"
 

@@ -19,6 +19,15 @@ import Exact._
   */
 object Relational {
 
+  /** q_cte_recursive's statement — its DuckDB oracle and its Spark run. */
+  private val cteRecursiveSql = """
+      WITH RECURSIVE t(n) AS (
+        SELECT CAST(r_regionkey AS BIGINT) FROM region
+        UNION ALL
+        SELECT n + 7 FROM t WHERE n + 7 < 200)
+      SELECT n, COUNT(*) AS c FROM t GROUP BY n
+    """
+
   val all: Seq[Q] = Seq(
 
     // TableScan + Selection + Projection; filters reach the parquet
@@ -475,22 +484,11 @@ object Relational {
     },
 
     // Recursive CTE (executor/cte.go CTEExec): arithmetic-walk series
-    // seeded from region keys, the driver-side bounded union loop that
-    // Spark lacks natively (see Iterate.unionLoop).
-    Q("q_cte_recursive", Some("""
-      WITH RECURSIVE t(n) AS (
-        SELECT CAST(r_regionkey AS BIGINT) FROM region
-        UNION ALL
-        SELECT n + 7 FROM t WHERE n + 7 < 200)
-      SELECT n, COUNT(*) AS c FROM t GROUP BY n
-    """)) { t =>
-      val seed = t.region.select(col("r_regionkey").cast("long").as("n"))
-      // ~28 tiny levels: batching 8 lazy levels per materialized job
-      // amortizes the per-round scheduling floor (3.2 s -> ~1 s).
-      Iterate.unionLoop(seed,
-        f => f.select((col("n") + 7).as("n")).filter(col("n") < 200),
-        maxIter = 64, batch = 8)
-        .groupBy("n").agg(count(lit(1)).as("c"))
+    // seeded from region keys, run by Spark's own WITH RECURSIVE
+    // (UnionLoopExec loops seed → recursive part until an empty
+    // iteration, as CTEExec does).
+    Q("q_cte_recursive", Some(cteRecursiveSql)) { t =>
+      t.sql(cteRecursiveSql, "region")
     },
 
     // Correlated scalar subquery, decorrelated (rule_decorrelate.go):

@@ -541,9 +541,9 @@ object TpchMore {
           col("rn"))
     },
 
-    // Native recursive CTE (Spark 4 UnionLoopExec) — the declarative
-    // twin of the driver-side iterate in q_cte_recursive (reference:
-    // executor/cte.go seed/recursive parts). Same result set.
+    // Native recursive CTE (Spark 4 UnionLoopExec) — the same
+    // statement as q_cte_recursive (reference: executor/cte.go
+    // seed/recursive parts), kept as its own registry entry.
     Q("q_cte_recursive_native", Some("""
       WITH RECURSIVE t(n) AS (
         SELECT CAST(r_regionkey AS BIGINT) FROM region

@@ -3,9 +3,8 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 
 /** Lineage truncation with a cluster-survivable option — ONE spelling
-  * of the graph loops' `cp()` discipline, shared by every layout that
-  * materializes derived state (graph iteration rounds, the streaming
-  * ingest sinks' novel sets, the IVF build's centroid rounds).
+  * of the `cp()` discipline for derived state that a loop or sink
+  * builds on.
   *
   * `localCheckpoint()` keeps blocks in executor memory — the right
   * local[32] call, but on a cluster a lost executor drops blocks and
@@ -14,7 +13,15 @@ import org.apache.spark.sql.DataFrame
   * `spark.graft.graph.checkpointDir` (an HDFS/S3 path on a real
   * cluster) switches every caller to a RELIABLE checkpoint: the
   * state is written to that storage once and re-read, so block loss
-  * re-reads files instead of re-running the derivation. The parquet
+  * re-reads files instead of re-running the derivation.
+  *
+  * The callers, so the sites the conf covers: the loop state of the
+  * iterative kernels (every `graph.Loop` driver, the per-Graph edge
+  * tables and the other graph kernels' checkpoints), the streaming
+  * ingest sinks' novel sets and the IVF build's centroid table. Not
+  * covered: memoized session inputs such as `Graph.derived`'s edge
+  * list and `CatalogQueries`' `edgeMemo`/`wprMemo`, and the one-off
+  * `localCheckpoint()`s inside single entries. The parquet
   * round-trip is deliberate (not Dataset.checkpoint, whose
   * unpersisted RDD checkpoint recomputes the plan a second time for
   * the checkpoint job). Files are session-scoped artifacts under the
@@ -50,7 +57,9 @@ object Reliable {
     * checkpoint exists for never happens. Under a reliable
     * checkpoint dir the parquet write IS the materialization, so
     * this degrades to [[cp]] unchanged (the fold is a scheduling
-    * win, never a semantics change). */
+    * win, never a semantics change). Iterative kernels get this fold
+    * from `graph.Loop`'s drivers, which pair it with their measure;
+    * call it directly only where no driver fits. */
   def cpLazy(df: DataFrame): DataFrame = {
     val ss = df.sparkSession
     ss.conf.getOption("spark.graft.graph.checkpointDir") match {

@@ -101,9 +101,11 @@ class PlanShapeSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     assert(p.contains("WindowGroupLimit"), s"no WindowGroupLimit in:\n$p")
   }
 
-  test("q_cte_recursive_native runs on Spark's UnionLoop operator") {
-    val p = plan("q_cte_recursive_native")
-    assert(p.contains("UnionLoop"), s"no UnionLoop in:\n$p")
+  test("q_cte_recursive and its twin run on Spark's UnionLoop operator") {
+    for (name <- Seq("q_cte_recursive_native", "q_cte_recursive")) {
+      val p = plan(name)
+      assert(p.contains("UnionLoop"), s"no UnionLoop in $name:\n$p")
+    }
   }
 
   test("q_tpch_q9 broadcasts every dimension side") {
@@ -634,15 +636,34 @@ class PlanShapeSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
       "DECIMAL(18,x) in any entry routed through Exact") {
     // A bare sum(dec2(x)) plans a DECIMAL(28,2)/(38,s) buffer, one
     // BigDecimal add per row in the hash aggregate.
-    val wide = ExactEntries.flatMap { name =>
-      val p = Registry.byName(name).run(t).queryExecution.executedPlan
-      collectWithSubqueries(p) { case n => n }.flatMap(_.expressions)
-        .flatMap(_.collect { case a: AggregateExpression => a.aggregateFunction })
-        .collect { case f @ (_: Sum | _: Average) => f }
-        .flatMap(_.aggBufferAttributes.map(_.dataType))
-        .collect { case d: DecimalType if d.precision > 18 => s"$name: $d" }
-    }
+    val wide = ExactEntries.flatMap(name => wideSums(name).map(f =>
+      s"$name: ${f.aggBufferAttributes.map(_.dataType).mkString(", ")}"))
     assert(wide.isEmpty, wide.distinct.mkString("\n"))
+  }
+
+  test("q_mv_refresh: the merge over the MV's `rev` is its only SUM " +
+      "buffer wider than DECIMAL(18,x)") {
+    // The snapshot and delta partials sum on longs (Exact.sumCents);
+    // the merge re-sums at most one partial row per priority and
+    // source in DECIMAL.
+    val wide = wideSums("q_mv_refresh")
+    assert(wide.nonEmpty &&
+      wide.forall(_.references.toSeq.map(_.name) == Seq("rev")),
+      wide.mkString("\n"))
+  }
+
+  /** The SUM/AVG functions of `name`'s executed plan (subqueries
+    * included) with a DecimalType buffer wider than 18 digits: one
+    * BigDecimal add per row in the hash aggregate. */
+  private def wideSums(name: String) = {
+    val p = Registry.byName(name).run(t).queryExecution.executedPlan
+    collectWithSubqueries(p) { case n => n }.flatMap(_.expressions)
+      .flatMap(_.collect { case a: AggregateExpression => a.aggregateFunction })
+      .collect { case f @ (_: Sum | _: Average) => f }
+      .filter(_.aggBufferAttributes.exists(_.dataType match {
+        case d: DecimalType => d.precision > 18
+        case _ => false
+      }))
   }
 
   /** Every entry whose DataFrame money sums go through `Exact`. */

@@ -3,10 +3,12 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** The shared reliable-checkpoint discipline (tools.Reliable): one
-  * conf key switches every lineage-truncation site — graph loops,
-  * the streaming ingest sinks' novel sets, the IVF build's centroid
-  * table — from executor-memory localCheckpoint to a re-readable
-  * parquet checkpoint. */
+  * conf key switches the loop state of the iterative kernels (every
+  * graph.Loop driver and the per-Graph edge tables), the streaming
+  * ingest sinks' novel sets and the IVF build's centroid table from
+  * executor-memory localCheckpoint to a re-readable parquet
+  * checkpoint. Memoized session inputs (Graph.derived's edge list,
+  * the catalog edge lists) stay local checkpoints. */
 class ReliableSpec extends SparkSpecBase {
 
   private val cpDir = "/tmp/graft_reliable_cp"
@@ -44,6 +46,25 @@ class ReliableSpec extends SparkSpecBase {
     val local = graft.tools.Reliable.cp(df)
     assert(local.collect().toSet == plain)
     assert(cpFiles() == 0)
+  }
+
+  test("the graph loops route through Reliable: with the dir set, " +
+      "g_coreness and g_catalog_pagerank checkpoint into it and " +
+      "return the same rows") {
+    for (name <- Seq("g_coreness", "g_catalog_pagerank")) {
+      val q = Registry.byName(name)
+      // Built without the dir first: the memoized inputs (derived
+      // graph, catalog tables) must not live in the dir this test
+      // deletes.
+      val plain = q.run(t).collect().toSet
+      val (cps, reliable) = withCpDir {
+        val before = graft.tools.Reliable.count
+        val rows = q.run(t).collect().toSet
+        (graft.tools.Reliable.count - before, rows)
+      }
+      assert(cps > 0, s"$name took no reliable checkpoint")
+      assert(reliable == plain, name)
+    }
   }
 
   test("the streaming ingest loop honors the reliable-checkpoint " +
