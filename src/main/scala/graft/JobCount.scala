@@ -8,12 +8,14 @@ package graft
   * windows; job/stage counts do not, so they are the honest evidence
   * for scheduling-shape changes (guide §5 driver round-trips).
   * Entries are reported in registry order; an unknown name throws.
+  * The session is `local[4]`, like Verify and the benchmark's 4-core
+  * runs, unless `SPARK_GRAFT_CPUS` says otherwise.
   *
   * Usage: runMain graft.JobCount <sfDir> name1,name2,...
   */
 object JobCount {
   def main(args: Array[String]): Unit = {
-    val spark = Run.session(32)
+    val spark = Run.session(4)
     val t = Tables(spark, args(0))
     val qs = Run.select(args(1).split(","))
     // Warm each selected entry once (memos, layouts, codegen).

@@ -11,13 +11,15 @@ import scala.util.matching.Regex
   * name throws. Plans are written [[normalize]]d, with the data dir
   * shown as `<sfDir>`, so dumps of two checkouts compare with a plain
   * `diff -r`.
+  * The session is `local[4]`, like Verify and the benchmark's 4-core
+  * runs, unless `SPARK_GRAFT_CPUS` says otherwise.
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> name1,name2,...
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = args(1)
-    val spark = Run.session(32)
+    val spark = Run.session(4)
     val t = Tables(spark, args(0))
     new java.io.File(outDir).mkdirs()
     Run.select(args(2).split(",")).foreach { q =>

@@ -1,6 +1,7 @@
 package graft.graph
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.functions._
 
 /** Graph traversal engine — the Spark realization of the tigraph
@@ -11,11 +12,15 @@ import org.apache.spark.sql.functions._
   *
   * The reference traverses adjacency via TiKV point-gets per level;
   * the Spark-native design instead keeps the edge list as a DataFrame
-  * pre-partitioned (`repartition` on `src`) so every BFS level is a
-  * co-partitioned join, and the frontier stays distributed end to end
-  * — the only driver-side values are empty-frontier flags. At cluster
-  * scale the frontier join auto-broadcasts (AQE) while small, and
-  * shuffles on `src` once it outgrows the broadcast threshold.
+  * and the frontier distributed end to end — the only driver-side
+  * values are empty-frontier flags and convergence scalars. The
+  * traversal tables are checkpoints with no partitioning the planner
+  * can see: a BFS level over them shuffles on `src`, or broadcasts
+  * one side while it is small. The per-vertex aggregation kernels
+  * (LPA, k-core) read a BOTH-orientation table persisted
+  * hash-partitioned on `src` instead ([[bothKeyed]]), so an aggregate
+  * per vertex over it, or a join that broadcasts the |V|-row state
+  * into it, plans no exchange of the edges.
   *
   * Edge schema: `src: BIGINT, dst: BIGINT`.
   */
@@ -36,12 +41,38 @@ final case class Graph(edges: DataFrame) {
   }
 
   /** The BOTH-orientation edge table, materialized ONCE per Graph
-    * instance (lazy — graphs that never traverse undirected never
-    * pay it). With [[Graph.derived]] memoizing instances per
-    * (session, input), every undirected kernel over the same derived
-    * graph — CC, k-core, LPA — starts from this one checkpoint
-    * instead of re-running the union+distinct per entry. */
+    * instance (lazy — graphs that never traverse undirected never pay
+    * it). With [[Graph.derived]] memoizing instances, every BFS and
+    * min-label kernel over the same derived graph — reach, CC —
+    * starts from this one checkpoint instead of re-running the
+    * union+distinct per entry. Those kernels re-derive sub-plans that
+    * scan it and rely on Spark reusing the exchanges above the scan,
+    * which [[bothKeyed]] would defeat. */
   private[graph] lazy val bothCp: DataFrame = new Cp(oriented("both")).cp()
+
+  /** The BOTH-orientation edge table for per-vertex aggregation (LPA,
+    * k-core, modularity, Jaccard neighbours), built ONCE per Graph
+    * instance: hash-partitioned on `src` and PERSISTED, not
+    * checkpointed. The planner sees a materialized cache's
+    * partitioning, so a per-`src` aggregate over this table, or a join
+    * that broadcasts a small side into it, plans no exchange of the
+    * edges; a `localCheckpoint` reports `UnknownPartitioning(0)` under
+    * AQE, so every round over [[bothCp]] shuffled the table again. The
+    * count materializes the cache at once: before that the planner
+    * cannot see its partitioning either, and after it the statistics
+    * are exact. The cost is exchange reuse: Spark 4.1 never reuses an
+    * exchange above a cached scan (AQE wraps each scan in its own
+    * `TableCacheQueryStageExec`, and no two of those canonicalize
+    * equal), which is why the BFS and min-label kernels keep
+    * [[bothCp]].
+    * Lost blocks recompute from lineage (this Graph's edge list), so
+    * `spark.graft.graph.checkpointDir` does not cover this table. */
+  private[graft] lazy val bothKeyed: DataFrame = {
+    val both = oriented("out").union(oriented("in"))
+      .repartition(col("src")).distinct().persist()
+    both.count()
+    both
+  }
   private lazy val outCp: DataFrame = new Cp(oriented("out")).cp()
   private lazy val inCp: DataFrame = new Cp(oriented("in")).cp()
 
@@ -75,13 +106,6 @@ final case class Graph(edges: DataFrame) {
     case "in"   => inCp
     case "both" => bothCp
   }
-
-  /** The CHECKPOINTED orientation — for kernels outside this class
-    * that would otherwise re-run oriented("both")'s union+distinct
-    * per entry (same rows as [[oriented]]; materialized once per
-    * instance and shared through [[Graph.derived]]'s memo). */
-  def orientedShared(direction: String): DataFrame =
-    orientedCp(direction)
 
   /** Edges usable for a traversal in `direction` (OUT, IN or BOTH —
     * ast.GraphEdgeDirection in the reference). */
@@ -542,34 +566,54 @@ final case class Graph(edges: DataFrame) {
     * too coarse (CC merges everything touching; LPA keeps densely-
     * linked clusters apart). Fully deterministic: every round, each
     * vertex adopts its neighbors' most frequent label, ties broken by
-    * the smallest label — an argmin over (-count, label), so the same
-    * graph always yields the same communities (classic LPA's random
-    * tie-breaks would be un-oracle-able). Fixed `iters` rounds, no
-    * convergence test — synchronous LPA can 2-cycle on bipartite-ish
-    * structures, so a bounded unrolled run IS the semantics (and what
-    * the unrolled SQL oracle reproduces). Scale: per round, one
-    * (node, lbl) count with map-side partials (key space bounded by
-    * Σdeg) and one per-node min_by agg — state is |V| rows, nothing
-    * wider than an edge shuffles, hub vertices are safe because label
-    * counts combine map-side before the exchange. */
-  def labelPropagation(iters: Int): DataFrame =
-    labelPropagation(iters, bothCp)
-
-  /** [[labelPropagation]] over a caller-supplied (already
-    * checkpointed) both-orientation edge list — callers that also
-    * need the undirected edges themselves (g_modularity's within-
-    * community count) pass theirs in so the derived-edge build runs
-    * ONCE, not once per consumer. */
-  def labelPropagation(iters: Int, und: DataFrame): DataFrame = {
-    def round(l: DataFrame): DataFrame =
-      und.as("E").join(l.as("L"), expr("E.dst = L.node"))
-        .groupBy(col("E.src").as("node"), col("L.lbl").as("lbl"))
-        .agg(count(lit(1)).as("cnt"))
-        .groupBy("node")
-        .agg(expr("min_by(lbl, struct(-cnt, lbl))").as("lbl"))
-    Loop.rounds(und.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("lbl")), iters)(round)
+    * the smallest label — Spark's deterministic `mode(lbl, true)`,
+    * so the same graph always yields the same communities (classic
+    * LPA's random tie-breaks would be un-oracle-able). Fixed `iters`
+    * rounds ([[Loop.rounds]]), no convergence test — synchronous LPA
+    * can 2-cycle on bipartite-ish structures, so a bounded unrolled
+    * run IS the semantics (and what the unrolled SQL oracle
+    * reproduces).
+    *
+    * Each round is ONE per-vertex aggregate over [[bothKeyed]], which
+    * is partitioned on `src`, so no round moves the edge table: round 1
+    * (identity labels) is `mode(dst)` with no join at all, and a later
+    * round joins the |V|-row label state by broadcast. The broadcast
+    * is hinted only when the state is known to fit under Spark's own
+    * `spark.sql.autoBroadcastJoinThreshold` — its row count is the
+    * memoized [[nodeCount]], its row size Spark's estimate — because
+    * the planner cannot see that bound: it estimates a lazy label
+    * state at the size of the aggregate's input and may broadcast the
+    * edge table instead. Otherwise the planner picks the join, which
+    * shuffles the edges by `dst` every round. The per-vertex buffer
+    * holds one count per distinct neighbour label, so it is bounded
+    * by the vertex's degree. */
+  def labelPropagation(iters: Int): DataFrame = {
+    val e = bothKeyed
+    val init = e.select(col("src").as("node")).distinct()
+      .select(col("node"), col("node").as("lbl"))
+    val threshold =
+      e.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val bc = threshold >= 0 && nodeCount *
+      EstimationUtils.getSizePerRow(init.queryExecution.analyzed.output) <=
+      threshold
+    // The identity labels (only ever the first round's input) need no
+    // join: a neighbour's label is its id.
+    def round(l: DataFrame): DataFrame = {
+      val nbrLabels =
+        if (l eq init) e.select(col("src"), col("dst").as("lbl"))
+        else e.join(if (bc) broadcast(l) else l,
+          col("dst") === col("node")).select(col("src"), col("lbl"))
+      nbrLabels.groupBy(col("src").as("node"))
+        .agg(mode(col("lbl"), deterministic = true).as("lbl"))
+    }
+    Loop.rounds(init, iters)(round)
   }
+
+  /** |V| of the BOTH orientation — every vertex is the `src` of at
+    * least one row — counted once per instance: one exchange-free
+    * per-`src` aggregate over [[bothKeyed]] and a global count. */
+  private lazy val nodeCount: Long =
+    bothKeyed.select("src").distinct().count()
 
   /** Strongly connected components of the DIRECTED graph — CC's
     * direction-aware sibling (a cycle is an SCC; a DAG is all
@@ -663,15 +707,27 @@ final case class Graph(edges: DataFrame) {
     * their data (specs assert it). State per round is the surviving
     * edge list: one map-combined degree agg + two co-partitioned
     * semi-joins, |E|-bounded — the standard distributed peel, no
-    * driver-side data beyond the one convergence scalar. */
+    * driver-side data beyond the one convergence scalar.
+    *
+    * The scalar is the surviving row count, which repeats in exactly
+    * the cycle where the surviving `src` set would. The state stays
+    * symmetric: it starts as [[bothKeyed]], which lists each edge
+    * from both ends, and a row survives iff both its ends are kept.
+    * So a cycle that drops a row drops an end w of it, and every row
+    * with `src` w goes too (there is one: the reversed row), so the
+    * `src` set shrinks; a cycle that drops a `src` drops that
+    * vertex's rows.
+    * A cycle removes an edge iff it removes a `src`, and since the
+    * state only shrinks, an equal count is an equal set — counted
+    * without the exchange a distinct `src` count costs. */
   def kCore(k: Int, maxRounds: Int): DataFrame =
-    Loop.untilStable(bothCp, maxRounds) { edges =>
+    Loop.untilStable(bothKeyed, maxRounds) { edges =>
       val keep = edges.groupBy("src").agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select("src")
       edges
         .join(keep, Seq("src"), "left_semi")
         .join(keep.withColumnRenamed("src", "dst"), Seq("dst"), "left_semi")
-    } (_.select("src").distinct().count())
+    } (_.count())
       .state.groupBy("src").agg(count(lit(1)).as("deg"))
       .select(col("src").as("node"), col("deg"))
 

@@ -808,12 +808,12 @@ object GraphQueries {
     // shuffle); |labels|-sized output. Oracle restates the unrolled
     // LPA stages plus the same arithmetic.
     Q("g_modularity", Some(modularityOracle(4))) { t =>
-      // The shared per-instance undirected checkpoint: the LPA
-      // rounds, the within-community count AND every other
-      // undirected kernel over the derived graph reuse ONE
-      // materialization.
-      val und = Graph.derived(t.orders).bothCp
-      val lab = Graph.derived(t.orders).labelPropagation(iters = 4, und)
+      // The shared per-instance undirected table: the LPA rounds,
+      // the within-community count AND every other undirected kernel
+      // over the derived graph reuse ONE materialization.
+      val g = Graph.derived(t.orders)
+      val und = g.bothKeyed
+      val lab = g.labelPropagation(iters = 4)
       val m2 = und.agg(count(lit(1)).as("m2"))
       val within = und
         .join(lab.select(col("node").as("src"), col("lbl").as("la")), "src")
@@ -847,9 +847,9 @@ object GraphQueries {
 
     // Community detection by deterministic synchronous LPA (4 rounds;
     // Graph.labelPropagation has the tie-break + scale rationale).
-    // The oracle unrolls the same four argmin-over-(-count,label)
-    // rounds and compares the FULL per-vertex assignment (|V| rows —
-    // mod-1000 node ids keep it tiny at any SF).
+    // The oracle unrolls the same four most-frequent-then-smallest
+    // label rounds and compares the FULL per-vertex assignment (|V|
+    // rows — mod-1000 node ids keep it tiny at any SF).
     Q("g_lpa", Some(lpaOracle(4))) { t =>
       Graph.derived(t.orders).labelPropagation(iters = 4)
     },
@@ -886,11 +886,11 @@ object GraphQueries {
     * cap that binds. */
   def jaccardPairs(t: graft.Tables,
       maxDeg: Long): org.apache.spark.sql.DataFrame = {
-    // The memoized BOTH-orientation checkpoint (bothCp), not the raw
+    // The memoized BOTH-orientation table, not the raw
     // oriented("both") builder — the union+distinct materializes once
-    // per derived graph and every undirected kernel shares it.
-    val u = Graph.derived(t.orders).orientedShared("both")
-      .repartition(col("src"))
+    // per derived graph, already partitioned on src, so the per-src
+    // aggregates below plan no exchange of it.
+    val u = Graph.derived(t.orders).bothKeyed
     val deg = u.groupBy("src").agg(count(lit(1)).as("deg"))
     val hubs = deg.filter(col("deg") > maxDeg).select("src")
     val scored = u.join(broadcast(hubs), Seq("src"), "left_anti")

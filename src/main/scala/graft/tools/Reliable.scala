@@ -7,26 +7,28 @@ import org.apache.spark.sql.DataFrame
   * builds on.
   *
   * `localCheckpoint()` keeps blocks in executor memory — the right
-  * local[32] call, but on a cluster a lost executor drops blocks and
-  * the WHOLE derivation recomputes from the source scan (lineage is
-  * truncated, so there is nothing to replay from). Setting
-  * `spark.graft.graph.checkpointDir` (an HDFS/S3 path on a real
-  * cluster) switches every caller to a RELIABLE checkpoint: the
+  * local[32] call, but on a cluster a lost executor drops blocks and,
+  * since lineage is truncated, nothing can rebuild them: the next job
+  * that reads the state fails with `CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`.
+  * Setting `spark.graft.graph.checkpointDir` (an HDFS/S3 path on a
+  * real cluster) switches every caller to a RELIABLE checkpoint: the
   * state is written to that storage once and re-read, so block loss
-  * re-reads files instead of re-running the derivation.
+  * re-reads files instead of failing the job.
   *
   * The callers, so the sites the conf covers: the loop state of the
   * iterative kernels (every `graph.Loop` driver, the per-Graph edge
   * tables and the other graph kernels' checkpoints), the streaming
   * ingest sinks' novel sets and the IVF build's centroid table. Not
   * covered: memoized session inputs such as `Graph.derived`'s edge
-  * list and `CatalogQueries`' `edgeMemo`/`wprMemo`, and the one-off
-  * `localCheckpoint()`s inside single entries. The parquet
-  * round-trip is deliberate (not Dataset.checkpoint, whose
-  * unpersisted RDD checkpoint recomputes the plan a second time for
-  * the checkpoint job). Files are session-scoped artifacts under the
-  * configured dir — the caller deletes the dir after the job, like
-  * any Spark checkpoint location.
+  * list and `CatalogQueries`' `edgeMemo`/`wprMemo`, the per-Graph
+  * `src`-keyed BOTH table of the per-vertex aggregation kernels
+  * (`Graph.bothKeyed`, a persisted frame whose lost blocks recompute
+  * from lineage), and the one-off `localCheckpoint()`s inside single
+  * entries. The parquet round-trip is deliberate (not
+  * Dataset.checkpoint, whose unpersisted RDD checkpoint recomputes
+  * the plan a second time for the checkpoint job). Files are
+  * session-scoped artifacts under the configured dir — the caller
+  * deletes the dir after the job, like any Spark checkpoint location.
   */
 object Reliable {
   /** JVM-unique sequence for reliable-checkpoint paths — two loops

@@ -1,7 +1,10 @@
 package graft
 
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Sum}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.types.DecimalType
 
 /** Plan-quality assertions: the scale story only holds if Catalyst
@@ -650,6 +653,37 @@ class PlanShapeSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     assert(wide.nonEmpty &&
       wide.forall(_.references.toSeq.map(_.name) == Seq("rev")),
       wide.mkString("\n"))
+  }
+
+  test("the derived graph's keyed BOTH table is partitioned on src: " +
+      "no LPA round moves it") {
+    val g = graph.Graph.derived(t.orders)
+    val grouped = g.bothKeyed.groupBy("src").count()
+      .queryExecution.executedPlan
+    assert(collect(grouped) { case x: ShuffleExchangeLike => x }.isEmpty,
+      s"groupBy(src) shuffles the table:\n$grouped")
+    g.labelPropagation(iters = 1).collect()  // memoizes the node count
+    // Each Loop.rounds checkpoint is one action; its executed plan may
+    // broadcast the |V|-row label state and nothing else.
+    val rounds = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        rounds.synchronized { rounds += qe.executedPlan }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      g.labelPropagation(iters = 4)
+      org.apache.spark.sql.GraftSqlShim.drainListenerBus(spark)
+    } finally spark.listenerManager.unregister(listener)
+    assert(rounds.size == 2, "two checkpoints of two rounds each")
+    rounds.foreach { p =>
+      assert(collect(p) { case x: ShuffleExchangeLike => x }.isEmpty,
+        s"an LPA round shuffles:\n$p")
+      val bcast = collect(p) { case b: BroadcastExchangeLike => b }
+      assert(bcast.forall(_.output.map(_.name) == Seq("node", "lbl")),
+        s"an LPA round broadcasts the edge table:\n$p")
+    }
   }
 
   /** The SUM/AVG functions of `name`'s executed plan (subqueries

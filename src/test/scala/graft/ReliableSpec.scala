@@ -8,7 +8,10 @@ import org.apache.spark.sql.functions._
   * ingest sinks' novel sets and the IVF build's centroid table from
   * executor-memory localCheckpoint to a re-readable parquet
   * checkpoint. Memoized session inputs (Graph.derived's edge list,
-  * the catalog edge lists) stay local checkpoints. */
+  * the catalog edge lists) stay local checkpoints, and the per-Graph
+  * src-keyed BOTH table of LPA, k-core and modularity
+  * (Graph.bothKeyed) is a persisted session input whose lost blocks
+  * recompute from lineage, so the conf does not cover it. */
 class ReliableSpec extends SparkSpecBase {
 
   private val cpDir = "/tmp/graft_reliable_cp"

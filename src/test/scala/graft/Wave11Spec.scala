@@ -69,6 +69,35 @@ class Wave11Spec extends SparkSpecBase {
     assert(Set(lbl(0L), lbl(1L)) == Set(0L))
     assert(lbl(11L) == lbl(12L))
     assert(lbl(0L) != lbl(11L))
+    // The same labels when the label state may not be broadcast: the
+    // planner's own join instead of the hinted one.
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    spark.conf.set(key, "-1")
+    val noBroadcast = try graph.Graph(e).labelPropagation(iters = 4)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    finally spark.conf.unset(key)
+    assert(noBroadcast == lbl)
+    // Ties go to the smallest label, in the join-free first round and
+    // in the joined later ones: on a 6-ring every vertex's two
+    // neighbours tie in round 1, and four vertices tie again in round
+    // 2; the star's hub ties over its four leaves. Checked against a
+    // direct synchronous LPA over the adjacency lists.
+    val ring = (0L until 6L).map(i => (i, (i + 1) % 6))
+    val star = Seq(7L, 3L, 9L, 5L).map(leaf => (50L, leaf))
+    val edges = ring ++ star
+    val adj = (edges ++ edges.map(_.swap)).distinct.groupBy(_._1)
+      .map { case (v, es) => v -> es.map(_._2) }
+    for (iters <- 1 to 4) {
+      val expected = (1 to iters).foldLeft(adj.map { case (v, _) => v -> v }) {
+        (l, _) => adj.map { case (v, nbrs) =>
+          v -> nbrs.groupBy(l).toSeq
+            .minBy { case (label, ns) => (-ns.size, label) }._1 }
+      }
+      val got = graph.Graph(edges.toDF("src", "dst"))
+        .labelPropagation(iters).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == expected, s"after $iters rounds")
+    }
   }
 
   test("d_substring_dup: anchors bound dups; identical docs fully flagged") {
