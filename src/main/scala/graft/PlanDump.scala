@@ -12,9 +12,10 @@ import scala.util.matching.Regex
   * shown as `<sfDir>`, so dumps of two checkouts compare with a plain
   * `diff -r`.
   * The session is `local[4]`, like Verify and the benchmark's 4-core
-  * runs, unless `SPARK_GRAFT_CPUS` says otherwise.
+  * runs, unless `SPARK_GRAFT_CPUS` says otherwise. Without a name list
+  * every registry entry is dumped, in registry order.
   *
-  * Usage: runMain graft.PlanDump <sfDir> <outDir> name1,name2,...
+  * Usage: runMain graft.PlanDump <sfDir> <outDir> [name1,name2,...]
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -22,7 +23,9 @@ object PlanDump {
     val spark = Run.session(4)
     val t = Tables(spark, args(0))
     new java.io.File(outDir).mkdirs()
-    Run.select(args(2).split(",")).foreach { q =>
+    val entries =
+      if (args.length > 2) Run.select(args(2).split(",")) else Registry.all
+    entries.foreach { q =>
       try {
         java.nio.file.Files.write(
           java.nio.file.Paths.get(s"$outDir/${q.name}.txt"),

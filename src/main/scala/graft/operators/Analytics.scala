@@ -353,12 +353,12 @@ object Analytics {
       val m = t.orders
         .groupBy(year(col("o_orderdate")).as("y"),
           month(col("o_orderdate")).as("m"))
-        .agg(Exact.sum2(col("o_totalprice")).as("sales"),
+        .agg(sum(Exact.dec2(col("o_totalprice"))).cast("double").as("sales"),
           count(lit(1)).as("n_orders"))
       val w = Window.orderBy(col("y"), col("m"))
       m.select(col("y"), col("m"), col("sales"), col("n_orders"),
-        Exact.sumCents(col("sales"), Some(
-          w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        sum(Exact.dec2(col("sales"))).over(
+          w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
           .cast("double").as("cum_sales"),
         round(col("sales") - lag(col("sales"), 1).over(w), 2)
           .as("mom_delta"))
@@ -382,7 +382,7 @@ object Analytics {
     """)) { t =>
       val wide = t.lineitem.groupBy("l_returnflag")
         .pivot("l_linestatus", Seq("F", "O"))
-        .agg(Exact.sum2(col("l_quantity")))
+        .agg(sum(Exact.dec2(col("l_quantity"))).cast("double"))
       wide.unpivot(Array(col("l_returnflag")),
         Array(col("F"), col("O")), "l_linestatus", "sum_qty")
     },

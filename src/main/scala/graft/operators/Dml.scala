@@ -389,14 +389,14 @@ object Dml {
   )
 
   /** Pre-aggregated partial of `orders` per priority — the MV's
-    * snapshot and its delta share one definition. `rev` sums on long
-    * accumulators (`Exact.sumCents`) but keeps Spark's DECIMAL(28,2)
-    * type for `sum(dec2(x))`, so the persisted snapshot's schema and
-    * values are those of the plain decimal sum. */
+    * snapshot and its delta share one definition. `rev` is Spark's
+    * DECIMAL(28,2) `sum(dec2(x))`, summed on long limbs by `Exact.Sums`;
+    * the merge's re-sum of `rev` is wider than 18 digits and stays a
+    * decimal sum. */
   private def mvPartial(df: org.apache.spark.sql.DataFrame) =
     df.groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n_orders"),
-        Exact.sumCents(col("o_totalprice")).as("rev"))
+        sum(Exact.dec2(col("o_totalprice"))).as("rev"))
 
   private val mvSplit = "1997-01-01"
 

@@ -61,12 +61,14 @@ object Relational {
         .filter(col("l_shipdate") <= lit("2001-09-01").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-          sum2(col("l_quantity")).as("sum_qty"),
-          sum2(col("l_extendedprice")).as("sum_base_price"),
+          sum(dec2(col("l_quantity"))).cast("double").as("sum_qty"),
+          sum(dec2(col("l_extendedprice"))).cast("double").as("sum_base_price"),
           sumProd2(col("l_extendedprice"), lit(1) - col("l_discount"))
             .as("sum_disc_price"),
-          avg2(col("l_quantity")).as("avg_qty"),
-          avg2(col("l_extendedprice")).as("avg_price"),
+          (sum(dec2(col("l_quantity"))).cast("double") /
+            count(col("l_quantity"))).as("avg_qty"),
+          (sum(dec2(col("l_extendedprice"))).cast("double") /
+            count(col("l_extendedprice"))).as("avg_price"),
           count(lit(1)).as("count_order"))
     },
 
@@ -175,7 +177,8 @@ object Relational {
         .join(broadcast(t.nation), col("c_nationkey") === col("n_nationkey"))
         .join(broadcast(t.region), col("n_regionkey") === col("r_regionkey"))
         .groupBy("r_name", "n_name")
-        .agg(count(lit(1)).as("n_cust"), sum2(col("c_acctbal")).as("sum_bal"))
+        .agg(count(lit(1)).as("n_cust"),
+          sum(dec2(col("c_acctbal"))).cast("double").as("sum_bal"))
     },
 
     // Shuffle join, fact ⋈ fact (executor/join.go HashJoin): both
@@ -207,7 +210,7 @@ object Relational {
       t.orders.hint("merge")
         .join(t.customer.hint("merge"), col("o_custkey") === col("c_custkey"))
         .groupBy("c_mktsegment")
-        .agg(sum2(col("o_totalprice")).as("sum_price"),
+        .agg(sum(dec2(col("o_totalprice"))).cast("double").as("sum_price"),
           count(lit(1)).as("n_orders"))
     },
 
@@ -236,7 +239,8 @@ object Relational {
       t.customer.join(t.orders, col("c_custkey") === col("o_custkey"),
           "left_anti")
         .groupBy("c_nationkey")
-        .agg(count(lit(1)).as("n_cust"), sum2(col("c_acctbal")).as("sum_bal"))
+        .agg(count(lit(1)).as("n_cust"),
+          sum(dec2(col("c_acctbal"))).cast("double").as("sum_bal"))
     },
 
     // Left outer join + re-aggregation, TPC-H Q13 shape.
@@ -367,11 +371,11 @@ object Relational {
         .orderBy(col("o_orderdate"), col("o_orderkey"))
       t.orders.filter(col("o_custkey") < 100)
         .select(col("o_custkey"), col("o_orderkey"),
-          sumCents(col("o_totalprice"), Some(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+          sum(dec2(col("o_totalprice"))).over(
+            w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
             .cast("double").as("running_spend"),
-          sumCents(col("o_totalprice"), Some(
-            w.rowsBetween(-2, Window.currentRow)))
+          sum(dec2(col("o_totalprice"))).over(
+            w.rowsBetween(-2, Window.currentRow))
             .cast("double").as("window3_spend"))
     },
 
@@ -432,7 +436,7 @@ object Relational {
       t.lineitem.rollup("l_returnflag", "l_linestatus").agg(
         grouping(col("l_returnflag")).cast("int").as("g_flag"),
         grouping(col("l_linestatus")).cast("int").as("g_status"),
-        sum2(col("l_quantity")).as("sum_qty"),
+        sum(dec2(col("l_quantity"))).cast("double").as("sum_qty"),
         count(lit(1)).as("n"))
     },
 
@@ -448,7 +452,7 @@ object Relational {
         grouping(col("o_orderpriority")).cast("int").as("g_prio"),
         grouping(col("o_orderstatus")).cast("int").as("g_status"),
         count(lit(1)).as("n"),
-        sum2(col("o_totalprice")).as("sum_price"))
+        sum(dec2(col("o_totalprice"))).cast("double").as("sum_price"))
     },
 
     // CTE reused twice (executor/cte.go), TPC-H Q15 shape: revenue
@@ -508,7 +512,8 @@ object Relational {
           col("p_partkey") === col("l_partkey"))
         .join(avgQty, col("ap_key") === col("l_partkey"))
         .filter(col("l_quantity") < col("qty_limit"))
-        .agg((sum2(col("l_extendedprice")) / 7.0).as("avg_yearly"))
+        .agg((sum(dec2(col("l_extendedprice"))).cast("double") / 7.0)
+          .as("avg_yearly"))
     },
 
     // IN-subquery → semi join on the distinct inner side.
@@ -645,7 +650,7 @@ object Relational {
         .rangeBetween(-30, Window.currentRow)
       base.select(col("o_custkey"), col("o_orderkey"),
         count(lit(1)).over(w).as("n_last30d"),
-        sumCents(col("o_totalprice"), Some(w)).cast("double")
+        sum(dec2(col("o_totalprice"))).over(w).cast("double")
           .as("spend_last30d"))
     },
 

@@ -45,14 +45,17 @@ object TpchFull {
         .filter(col("l_shipdate") <= lit("2001-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-          sum2(col("l_quantity")).as("sum_qty"),
-          sum2(col("l_extendedprice")).as("sum_base_price"),
+          sum(dec2(col("l_quantity"))).cast("double").as("sum_qty"),
+          sum(dec2(col("l_extendedprice"))).cast("double").as("sum_base_price"),
           sumUnits(discPrice, 4).cast("double").as("sum_disc_price"),
           sumUnits(times(discPrice, lit(100) + cents(col("l_tax"))), 6)
             .cast("double").as("sum_charge"),
-          (sum2(col("l_quantity")) / count(lit(1))).as("avg_qty"),
-          (sum2(col("l_extendedprice")) / count(lit(1))).as("avg_price"),
-          (sum2(col("l_discount")) / count(lit(1))).as("avg_disc"),
+          (sum(dec2(col("l_quantity"))).cast("double") / count(lit(1)))
+            .as("avg_qty"),
+          (sum(dec2(col("l_extendedprice"))).cast("double") / count(lit(1)))
+            .as("avg_price"),
+          (sum(dec2(col("l_discount"))).cast("double") / count(lit(1)))
+            .as("avg_disc"),
           count(lit(1)).as("count_order"))
     },
 
@@ -176,14 +179,15 @@ object TpchFull {
           col("p_partkey") === col("l_partkey"), "left_semi")
         .groupBy(col("l_partkey").as("pk"))
         .agg(count(lit(1)).as("n_pk"),
-          sumCents(col("l_quantity")).as("sum_qty_pk"))
+          sum(dec2(col("l_quantity"))).as("sum_qty_pk"))
       t.lineitem
         .join(broadcast(brandParts),
           col("p_partkey") === col("l_partkey"))
         .join(perPart, col("pk") === col("l_partkey"))
         .filter(dec2(col("l_quantity")) * 5 * col("n_pk") <
           col("sum_qty_pk"))
-        .agg((sum2(col("l_extendedprice")) / 7.0).as("avg_yearly"))
+        .agg((sum(dec2(col("l_extendedprice"))).cast("double") / 7.0)
+          .as("avg_yearly"))
     },
   )
 }

@@ -163,7 +163,7 @@ object TpchMore {
       // per-order sums join straight to orders/customer — no second
       // lineitem shuffle, no re-aggregation on five columns.
       val big = t.lineitem.groupBy("l_orderkey")
-        .agg(sumCents(col("l_quantity")).as("q"))
+        .agg(sum(dec2(col("l_quantity"))).as("q"))
         .filter(col("q") > 250)
       big
         .join(t.orders, col("o_orderkey") === col("l_orderkey"))
@@ -236,7 +236,8 @@ object TpchMore {
       val codes = Seq(1, 3, 5, 7, 9)
       val inCode = t.customer.filter((col("c_nationkey") % 10).isin(codes: _*))
       val thresh = inCode.filter(col("c_acctbal") > 0.0)
-        .agg((sum2(col("c_acctbal")) / count(lit(1))).as("avg_bal"))
+        .agg((sum(dec2(col("c_acctbal"))).cast("double") / count(lit(1)))
+          .as("avg_bal"))
       inCode
         .crossJoin(broadcast(thresh))
         .filter(col("c_acctbal") > col("avg_bal"))
@@ -246,7 +247,7 @@ object TpchMore {
           col("c_custkey") === col("o_custkey"), "left_anti")
         .groupBy((col("c_nationkey") % 10).cast("int").as("cntrycode"))
         .agg(count(lit(1)).as("numcust"),
-          sum2(col("c_acctbal")).as("totacctbal"))
+          sum(dec2(col("c_acctbal"))).cast("double").as("totacctbal"))
     },
 
     // Q2 shape — cheapest regional supplier per part (the correlated
@@ -396,7 +397,7 @@ object TpchMore {
         .join(broadcast(t.nation.filter(col("n_name") === "NATION_5")),
           col("s_nationkey") === col("n_nationkey"))
         .groupBy(col("l_partkey").as("pk"))
-        .agg(sumCents(col("l_extendedprice")).as("val"))
+        .agg(sum(dec2(col("l_extendedprice"))).as("val"))
         .localCheckpoint()
       val threshold = ps.agg(
         (sumUnits(cents(col("val")), 2) * lit(BigDecimal("0.001")))
@@ -507,7 +508,7 @@ object TpchMore {
       // sets operator, now over 9 rows.
       val base = t.lineitem
         .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(sumCents(col("l_quantity")).as("sq"),
+        .agg(sum(dec2(col("l_quantity"))).as("sq"),
           count(lit(1)).as("cnt"))
       base.groupingSets(
           Seq(Seq(col("l_returnflag")), Seq(col("l_linestatus")),
@@ -515,7 +516,7 @@ object TpchMore {
           col("l_returnflag"), col("l_linestatus"))
         .agg(grouping(col("l_returnflag")).cast("int").as("g_flag"),
           grouping(col("l_linestatus")).cast("int").as("g_status"),
-          sum2(col("sq")).as("sum_qty"),
+          sum(dec2(col("sq"))).cast("double").as("sum_qty"),
           sum(col("cnt")).as("n"))
     },
 

@@ -356,7 +356,7 @@ object Wave11 {
           col("o_orderdate").between(col("vfrom"), col("vto")))
         .groupBy(year(col("o_orderdate")).cast("int").as("yr"), col("seg"))
         .agg(count(lit(1)).as("n_orders"),
-          Exact.sum2(col("o_totalprice")).as("revenue"))
+          sum(Exact.dec2(col("o_totalprice"))).cast("double").as("revenue"))
     },
 
     // SNAPSHOT DIFF — the CDC READ leg (executor/change.go:29

@@ -109,7 +109,7 @@ object Wave12 {
       PartitionedFact.custkeyPruned(fact, Seq(1L, 20L, 35L, 100L))
         .groupBy("o_custkey")
         .agg(count(lit(1)).as("n"),
-          Exact.sum2(col("o_totalprice")).as("spend"))
+          sum(Exact.dec2(col("o_totalprice"))).cast("double").as("spend"))
     },
 
     // LIST COLUMNS partition pruning (reference:
@@ -137,7 +137,7 @@ object Wave12 {
       PartitionedFact.priorityPruned(fact, Seq("1-URGENT", "2-HIGH"))
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n"),
-          Exact.sum2(col("o_totalprice")).as("spend"))
+          sum(Exact.dec2(col("o_totalprice"))).cast("double").as("spend"))
     },
 
     // SEQUENCE with CACHE blocks + CYCLE (reference: ddl/sequence.go;
@@ -236,7 +236,7 @@ object Wave12 {
         .withColumn("prio_class", substring(col("o_orderpriority"), 1, 1))
         .groupBy("prio_class")
         .agg(count(lit(1)).as("n"),
-          Exact.sum2(col("o_totalprice")).as("spend"))
+          sum(Exact.dec2(col("o_totalprice"))).cast("double").as("spend"))
     },
 
     // AVRO round trip — the fourth interchange format beside

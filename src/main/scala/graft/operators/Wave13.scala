@@ -96,7 +96,7 @@ object Wave13 {
           cust("c_nationkey") === dim("n_nationkey"))
         .groupBy(col("n_name"))
         .agg(count(lit(1)).as("n_cust"),
-          Exact.sum2(col("c_acctbal")).as("acctbal"))
+          sum(Exact.dec2(col("c_acctbal"))).cast("double").as("acctbal"))
     },
 
     // Local + global temporary tables (reference: table/temptable/
@@ -141,12 +141,12 @@ object Wave13 {
     """)) { t =>
       val tmp = t.orders.groupBy("o_custkey")
         .agg(count(lit(1)).as("n_ord"),
-          Exact.sum2(col("o_totalprice")).as("spend"))
+          sum(Exact.dec2(col("o_totalprice"))).cast("double").as("spend"))
         .cache() // TiDB temp tables STORE rows for the session
       tmp.createOrReplaceTempView("tmp_cust_orders")
       t.spark.table("tmp_cust_orders")
         .agg(count(lit(1)).as("n_total"),
-          Exact.sumCents(col("spend")).as("s_total"))
+          sum(Exact.dec2(col("spend"))).as("s_total"))
         .createOrReplaceGlobalTempView("gtmp_spend_cut")
       t.customer.createOrReplaceTempView("wave13_customer")
       t.spark.sql("""

@@ -317,7 +317,7 @@ object Wave16 {
         .filter(col("yr") === 1995 && col("pclass") === "1")
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"),
-          Exact.sum2(col("o_totalprice")).as("total"))
+          sum(Exact.dec2(col("o_totalprice"))).cast("double").as("total"))
     },
   )
 }

@@ -253,7 +253,7 @@ object Wave17 {
       def base = t.orders
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n_orders"),
-          Exact.sum2(col("o_totalprice")).as("revenue"))
+          sum(Exact.dec2(col("o_totalprice"))).cast("double").as("revenue"))
       def checked = AdminCheck.check(base, Dml.mvMerged(t),
         Seq("o_orderpriority"))
       val dir = Dml.mvDir(t) // built before it is corrupted
@@ -310,7 +310,7 @@ object Wave17 {
       def base = t.orders
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n_orders"),
-          Exact.sum2(col("o_totalprice")).as("revenue"))
+          sum(Exact.dec2(col("o_totalprice"))).cast("double").as("revenue"))
       def checked = AdminCheck.check(base, Dml.mvMerged(t),
         Seq("o_orderpriority"))
       val dir = Dml.mvDir(t) // built before it is corrupted
@@ -383,7 +383,7 @@ object Wave17 {
       t.spark.read.parquet(root)
         .groupBy(col("oyear").cast("long").as("oyear"))
         .agg(count(lit(1)).as("n_orders"),
-          Exact.sum2(col("o_totalprice")).as("revenue"))
+          sum(Exact.dec2(col("o_totalprice"))).cast("double").as("revenue"))
     },
   )
 

@@ -218,7 +218,7 @@ object Wave18 {
       def agg(df: org.apache.spark.sql.DataFrame, stage: String) =
         df.groupBy("o_orderstatus")
           .agg(count(lit(1)).as("cnt"),
-            Exact.sum2(col("p")).as("total"))
+            sum(Exact.dec2(col("p"))).cast("double").as("total"))
           .select(lit(stage).as("stage"), col("o_orderstatus"),
             col("cnt"), col("total"))
       // COMMIT: the merged state becomes the next persisted snapshot

@@ -107,7 +107,7 @@ object Wave20 {
       def card(name: String) = {
         val r = read(name)
           .agg(count(lit(1)).as("n"),
-            Exact.sum2(col("p")).as("s")).head()
+            sum(Exact.dec2(col("p"))).cast("double").as("s")).head()
         (r.getLong(0), r.getDouble(1))
       }
       seed("rt_src", col("o_orderkey") % 11 === 0)

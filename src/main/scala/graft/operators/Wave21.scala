@@ -216,7 +216,7 @@ object Wave21 {
       def card(dir: String): (Long, Double) = {
         val r = t.spark.read.parquet(dir)
           .agg(count(lit(1)).as("n"),
-            coalesce(Exact.sum2(col("p")), lit(0.0))
+            coalesce(sum(Exact.dec2(col("p"))).cast("double"), lit(0.0))
               .as("s")).head()
         (r.getLong(0), r.getDouble(1))
       }

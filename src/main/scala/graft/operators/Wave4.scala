@@ -88,7 +88,7 @@ object Wave4 {
         .filter(collate(col("seg"), "UTF8_LCASE") =!= lit("MACHINERY"))
         .groupBy(collate(col("seg"), "UTF8_LCASE").as("k"))
         .agg(min(lower(col("seg"))).as("seg"), count(lit(1)).as("n"),
-          Exact.sum2(col("c_acctbal")).as("bal"))
+          sum(Exact.dec2(col("c_acctbal"))).cast("double").as("bal"))
         .select("seg", "n", "bal")
     },
 

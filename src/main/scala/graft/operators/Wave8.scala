@@ -104,7 +104,7 @@ object Wave8 {
         .union(upd).union(ins)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("cnt"),
-          Exact.sum2(col("p")).as("total"))
+          sum(Exact.dec2(col("p"))).cast("double").as("total"))
     },
 
     // ANALYZE TABLE (reference: executor/analyze.go + statistics/

@@ -104,7 +104,7 @@ object Wave9 {
       val base = t.orders
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n_orders"),
-          Exact.sum2(col("o_totalprice")).as("revenue"))
+          sum(Exact.dec2(col("o_totalprice"))).cast("double").as("revenue"))
       AdminCheck.check(base, Dml.mvMerged(t), Seq("o_orderpriority"))
     },
 

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.{Q, Tables}
-import graft.operators.Exact.sum2
+import graft.operators.Exact.dec2
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -28,7 +28,7 @@ object EventQueries {
         .groupBy(window(col("ts"), "1 hour").getField("start").as("w_start"),
           col("event_type"))
         .agg(count(lit(1)).as("n"),
-          sum2(col("value")).as("sum_value"),
+          sum(dec2(col("value"))).cast("double").as("sum_value"),
           countDistinct(col("user_id")).as("n_users"))
     },
 
@@ -160,7 +160,7 @@ object EventQueries {
           col("ck.ts") >= col("ts") - expr("INTERVAL 7 DAYS"))
         .groupBy(col("ck.event_id").as("click_id"), col("user_id"))
         .agg(count(lit(1)).cast("long").as("n_conversions"),
-          sum2(col("value")).as("attr_value"))
+          sum(dec2(col("value"))).cast("double").as("attr_value"))
     },
 
     // FORWARD as-of join: each purchase picks the EARLIEST click of
@@ -231,7 +231,7 @@ object EventQueries {
       t.events
         .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
         .agg(count(lit(1)).as("n_events"),
-          sum2(col("value")).as("sum_value"))
+          sum(dec2(col("value"))).cast("double").as("sum_value"))
         .select(col("user_id"),
           col("session_window.start").as("s_start"),
           col("session_window.end").as("s_end"),
@@ -264,7 +264,7 @@ object EventQueries {
         .join(t.fan(t.events), buckets, col("ts"), col("lo"), col("hi"))
         .groupBy("bucket_id")
         .agg(count(lit(1)).as("n"),
-          sum2(col("value")).as("sum_value"))
+          sum(dec2(col("value"))).cast("double").as("sum_value"))
     },
 
     // Ordered funnel view → click → purchase: per user, the earliest

@@ -2,8 +2,11 @@ package graft
 
 import graft.streaming.Streams
 import graft.streaming.Streams.Event
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 
 /** Structured Streaming parity: the same transforms produce the same
   * results whether driven by a stream or a batch scan.
@@ -31,6 +34,33 @@ class StreamingSpec extends SparkSpecBase {
       .select("w_start", "event_type", "n", "sum_value")
       .collect().map(_.toSeq).toSet
     assert(streamed == batch && streamed.nonEmpty)
+  }
+
+  test("a streaming aggregate keeps Spark's DECIMAL(28,2) sum buffer; " +
+      "the batch plan of the same function sums longs") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    // The sums of a plan's aggregates that add DECIMAL values, by
+    // buffer type.
+    def decimalSums(p: LogicalPlan) =
+      p.collect { case n => n.expressions }.flatten.flatMap(_.collect {
+        case s: Sum if s.child.dataType.isInstanceOf[DecimalType] =>
+          s.aggBufferAttributes.head.dataType
+      })
+    val input = MemoryStream[Event]
+    input.addData(eventsDf.as[Event].collect().toSeq)
+    val query = Streams.windowed(input.toDF())
+      .writeStream.outputMode("complete")
+      .format("memory").queryName("win_buffers").start()
+    val streamed = try {
+      query.processAllAvailable()
+      query.asInstanceOf[StreamingQueryWrapper].streamingQuery
+        .lastExecution.optimizedPlan
+    } finally query.stop()
+    // A changed buffer schema would break the state store on restart.
+    assert(decimalSums(streamed) == Seq(DecimalType(28, 2)), streamed)
+    val batch = Streams.windowed(eventsDf).queryExecution.optimizedPlan
+    assert(decimalSums(batch).isEmpty, batch)
   }
 
   test("state-store reader exposes a running aggregation's state " +

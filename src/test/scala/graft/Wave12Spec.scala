@@ -77,7 +77,8 @@ class Wave12Spec extends SparkSpecBase {
     val virtual = t.orders.filter(year(col("o_orderdate")) === 1995)
       .groupBy(substring(col("o_orderpriority"), 1, 1).as("prio_class"))
       .agg(count(lit(1)).as("n"),
-        operators.Exact.sum2(col("o_totalprice")).as("spend"))
+        sum(operators.Exact.dec2(col("o_totalprice"))).cast("double")
+          .as("spend"))
       .collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap
     assert(stored == virtual,
