@@ -17,10 +17,12 @@ import org.apache.spark.sql.functions._
   * traversal tables are checkpoints with no partitioning the planner
   * can see: a BFS level over them shuffles on `src`, or broadcasts
   * one side while it is small. The per-vertex aggregation kernels
-  * (LPA, k-core) read a BOTH-orientation table persisted
-  * hash-partitioned on `src` instead ([[bothKeyed]]), so an aggregate
-  * per vertex over it, or a join that broadcasts the |V|-row state
-  * into it, plans no exchange of the edges.
+  * (LPA, k-core, modularity) read a BOTH-orientation table persisted
+  * hash-partitioned on `src` instead ([[bothKeyed]]) and keep their
+  * loop state |V|-row (labels, degrees), so an aggregate per vertex
+  * over the table, or a join that broadcasts the state into it
+  * ([[broadcastVertices]]), plans no exchange of the edges. That
+  * table is only ever scanned, never checkpointed as loop state.
   *
   * Edge schema: `src: BIGINT, dst: BIGINT`.
   */
@@ -577,13 +579,8 @@ final case class Graph(edges: DataFrame) {
     * Each round is ONE per-vertex aggregate over [[bothKeyed]], which
     * is partitioned on `src`, so no round moves the edge table: round 1
     * (identity labels) is `mode(dst)` with no join at all, and a later
-    * round joins the |V|-row label state by broadcast. The broadcast
-    * is hinted only when the state is known to fit under Spark's own
-    * `spark.sql.autoBroadcastJoinThreshold` — its row count is the
-    * memoized [[nodeCount]], its row size Spark's estimate — because
-    * the planner cannot see that bound: it estimates a lazy label
-    * state at the size of the aggregate's input and may broadcast the
-    * edge table instead. Otherwise the planner picks the join, which
+    * round joins the |V|-row label state through [[broadcastVertices]].
+    * When the state does not fit, the planner picks the join, which
     * shuffles the edges by `dst` every round. The per-vertex buffer
     * holds one count per distinct neighbour label, so it is bounded
     * by the vertex's degree. */
@@ -591,17 +588,12 @@ final case class Graph(edges: DataFrame) {
     val e = bothKeyed
     val init = e.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("lbl"))
-    val threshold =
-      e.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    val bc = threshold >= 0 && nodeCount *
-      EstimationUtils.getSizePerRow(init.queryExecution.analyzed.output) <=
-      threshold
     // The identity labels (only ever the first round's input) need no
     // join: a neighbour's label is its id.
     def round(l: DataFrame): DataFrame = {
       val nbrLabels =
         if (l eq init) e.select(col("src"), col("dst").as("lbl"))
-        else e.join(if (bc) broadcast(l) else l,
+        else e.join(broadcastVertices(l),
           col("dst") === col("node")).select(col("src"), col("lbl"))
       nbrLabels.groupBy(col("src").as("node"))
         .agg(mode(col("lbl"), deterministic = true).as("lbl"))
@@ -615,6 +607,22 @@ final case class Graph(edges: DataFrame) {
   private lazy val nodeCount: Long =
     bothKeyed.select("src").distinct().count()
 
+  /** `v`, a frame of at most one row per vertex, hinted for broadcast
+    * when [[nodeCount]] rows at Spark's row-size estimate for its
+    * columns fit under Spark's own `spark.sql.autoBroadcastJoinThreshold`;
+    * otherwise `v` as given, and the planner picks the join. The hint
+    * is needed because the planner cannot see that bound: it estimates
+    * a lazy vertex state at the size of its input, often the edge
+    * table, and may broadcast [[bothKeyed]] instead. */
+  private[graph] def broadcastVertices(v: DataFrame): DataFrame = {
+    val threshold =
+      v.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    if (threshold >= 0 && nodeCount *
+        EstimationUtils.getSizePerRow(v.queryExecution.analyzed.output) <=
+        threshold) broadcast(v)
+    else v
+  }
+
   /** Strongly connected components of the DIRECTED graph — CC's
     * direction-aware sibling (a cycle is an SCC; a DAG is all
     * singletons; the mutual-reachability question implied by the
@@ -627,8 +635,8 @@ final case class Graph(edges: DataFrame) {
     *  1. TRIM: an edge whose end has no in-edge or no out-edge in the
     *     live subgraph can't sit on a cycle; peel such edges to a
     *     stable live-edge count ([[Loop.untilStable]]; each cycle =
-    *     one degree-flag agg + two semi-joins, |E|-bounded like
-    *     kCore's peel). A node left without live edges is a singleton.
+    *     one degree-flag agg + two semi-joins, |E|-bounded). A node
+    *     left without live edges is a singleton.
     *  2. COLOR: [[Graph.minLabels]] — CC's kernel — FORWARD along the
     *     live edges and BACKWARD along the reversed ones. F(v) = min
     *     over ancestors ∪ {v}, B(v) = min over descendants ∪ {v}.
@@ -704,32 +712,46 @@ final case class Graph(edges: DataFrame) {
     * operator's semantics are exactly reproducible by a bounded
     * unrolled oracle (extra oracle rounds past the fixpoint are
     * no-ops); callers pick maxRounds ≥ the convergence depth of
-    * their data (specs assert it). State per round is the surviving
-    * edge list: one map-combined degree agg + two co-partitioned
-    * semi-joins, |E|-bounded — the standard distributed peel, no
-    * driver-side data beyond the one convergence scalar.
+    * their data (specs assert it). Output: (node, deg) per surviving
+    * vertex, its degree inside the core.
     *
-    * The scalar is the surviving row count, which repeats in exactly
-    * the cycle where the surviving `src` set would. The state stays
-    * symmetric: it starts as [[bothKeyed]], which lists each edge
-    * from both ends, and a row survives iff both its ends are kept.
-    * So a cycle that drops a row drops an end w of it, and every row
-    * with `src` w goes too (there is one: the reversed row), so the
-    * `src` set shrinks; a cycle that drops a `src` drops that
-    * vertex's rows.
-    * A cycle removes an edge iff it removes a `src`, and since the
-    * state only shrinks, an equal count is an equal set — counted
-    * without the exchange a distinct `src` count costs. */
-  def kCore(k: Int, maxRounds: Int): DataFrame =
-    Loop.untilStable(bothKeyed, maxRounds) { edges =>
-      val keep = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k).select("src")
-      edges
-        .join(keep, Seq("src"), "left_semi")
-        .join(keep.withColumnRenamed("src", "dst"), Seq("dst"), "left_semi")
-    } (_.count())
-      .state.groupBy("src").agg(count(lit(1)).as("deg"))
-      .select(col("src").as("node"), col("deg"))
+    * The loop state is the |V|-row degree table, never the edges:
+    * `deg₀` counts [[bothKeyed]] per `src`, and a peel semi-joins
+    * [[bothKeyed]] on `src` and on `dst` against the broadcast keep-set
+    * {v : deg(v) ≥ k} and counts per `src` again. The table stays the
+    * streamed side of both joins and is partitioned on `src`, so no
+    * peel exchanges an edge. Each cycle lazily checkpoints the degree
+    * table ([[Loop.until]]), and one scalar, the number of vertices
+    * with deg < k, materializes it and decides the stop.
+    *
+    * Why peeling [[bothKeyed]] against the latest keep-set K_i is the
+    * peel of the surviving edges E_i, and why the scalar is the
+    * fixpoint test. E_0 is [[bothKeyed]], deg_i counts E_i per `src`,
+    * and E_{i+1} is the rows of E_i whose two ends are in K_i. A
+    * vertex in K_i has deg_i ≥ k ≥ 1, so a row of E_i, whose ends are
+    * in K_{i-1}; so K_i ⊆ K_{i-1}, and E_{i+1} is exactly the rows of
+    * E_0 with both ends in K_i. Now the stop: deg_i lists the vertices
+    * with a row in E_i. If none of them has deg < k, all are in K_i,
+    * so E_{i+1} = E_i and the peel is at its fixpoint. If one has,
+    * it is not in K_i and loses its rows, so deg_{i+1} differs. The
+    * scalar is zero exactly at the fixpoint, so the loop runs
+    * min(maxRounds, depth) peels and a graph already at its fixpoint
+    * costs the one scalar over `deg₀`. */
+  def kCore(k: Int, maxRounds: Int): DataFrame = {
+    val e = bothKeyed
+    def degrees(edges: DataFrame): DataFrame =
+      edges.groupBy("src").agg(count(lit(1)).as("deg"))
+    Loop.until(degrees(e).cpLazy(), maxRounds) { deg =>
+      // One keep-set frame on both sides, so the two broadcasts plan
+      // equal and the second reuses the first.
+      val keep = broadcastVertices(
+        deg.filter(col("deg") >= k).select(col("src").as("v")))
+      degrees(e
+        .join(keep, col("src") === col("v"), "left_semi")
+        .join(keep, col("dst") === col("v"), "left_semi"))
+    } (_.agg(count(when(col("deg") < k, true))).head().getLong(0))(_ == 0L)
+      .state.select(col("src").as("node"), col("deg"))
+  }
 
   /** k-truss: the maximal subgraph in which every EDGE sits in at
     * least k−2 triangles — the edge-level cohesion test beside

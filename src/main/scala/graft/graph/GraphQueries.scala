@@ -66,7 +66,9 @@ object GraphQueries {
     },
 
     // 2-hop MATCH path (ast/graph.go GraphPathPattern with two
-    // OUT edges): per source, path count + distinct destinations.
+    // OUT edges): per source, path count + distinct destinations. The
+    // filtered first hop (20 sources) is the broadcast side, so the
+    // whole OUT edge table of the second hop is streamed, not hashed.
     Q("g_nhop", Some(s"""
       $edgeCte
       SELECT e1.src AS src, COUNT(*) AS n_paths,
@@ -79,7 +81,7 @@ object GraphQueries {
       val e1 = g.oriented("out").filter(col("src") < 20)
       val e2 = g.oriented("out")
         .select(col("src").as("mid"), col("dst").as("dst2"))
-      e1.join(e2, e1("dst") === e2("mid"))
+      broadcast(e1).join(e2, e1("dst") === e2("mid"))
         .groupBy("src")
         .agg(count(lit(1)).as("n_paths"),
           countDistinct(col("dst2")).as("n_dest"))
@@ -803,10 +805,11 @@ object GraphQueries {
     // detected communities are real structure or noise (Q > 0 means
     // denser-than-random inside communities). Per community c over
     // the symmetric edge set: contribution = w2_c/2m − (d_c/2m)².
-    // Three map-combined aggregations on top of the labels (within-
-    // edge count joins labels to BOTH endpoints on the one edge
-    // shuffle); |labels|-sized output. Oracle restates the unrolled
-    // LPA stages plus the same arithmetic.
+    // Three map-combined aggregations on top of the labels (the
+    // within-community count joins labels to BOTH endpoints); the
+    // |V|-row label table is the broadcast side of every join, so the
+    // edge table is never exchanged; |labels|-sized output. Oracle
+    // restates the unrolled LPA stages plus the same arithmetic.
     Q("g_modularity", Some(modularityOracle(4))) { t =>
       // The shared per-instance undirected table: the LPA rounds,
       // the within-community count AND every other undirected kernel
@@ -815,13 +818,15 @@ object GraphQueries {
       val und = g.bothKeyed
       val lab = g.labelPropagation(iters = 4)
       val m2 = und.agg(count(lit(1)).as("m2"))
+      def labels(node: String, lbl: String) = g.broadcastVertices(
+        lab.select(col("node").as(node), col("lbl").as(lbl)))
       val within = und
-        .join(lab.select(col("node").as("src"), col("lbl").as("la")), "src")
-        .join(lab.select(col("node").as("dst"), col("lbl").as("lb")), "dst")
+        .join(labels("src", "la"), "src")
+        .join(labels("dst", "lb"), "dst")
         .filter(col("la") === col("lb"))
         .groupBy(col("la").as("lbl")).agg(count(lit(1)).as("w2"))
       val degs = und
-        .join(lab.select(col("node").as("src"), col("lbl")), "src")
+        .join(labels("src", "lbl"), "src")
         .groupBy("lbl")
         .agg(count(lit(1)).as("d"), countDistinct(col("src")).as("sz"))
       degs.join(within, Seq("lbl"), "left").crossJoin(broadcast(m2))

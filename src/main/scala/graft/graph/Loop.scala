@@ -15,8 +15,9 @@ import org.apache.spark.sql.functions.{col, count, lit, when}
   * job (~50 ms on 4 cores), so the policies below exist to spend as
   * few of them as the semantics allow:
   *  - [[rounds]]: a fixed step count, two steps per eager checkpoint;
-  *  - [[untilStable]]: a lazy checkpoint per cycle, materialized by the
-  *    cycle's own single-row convergence scalar — one job per cycle;
+  *  - [[until]]: a lazy checkpoint per cycle, materialized by the
+  *    cycle's own single-row scalar, which also decides the stop — one
+  *    job per cycle; [[untilStable]] stops when that scalar repeats;
   *  - [[levels]]: level-synchronous BFS, two levels per job while the
   *    frontier is small.
   * A new kernel picks one of these instead of pairing `cp`/`cpLazy`
@@ -36,38 +37,52 @@ object Loop {
     state
   }
 
-  /** The end of an [[untilStable]] loop: the last state, the cycles
-    * run, whether the measure repeated (false when the bound stopped
-    * the loop) and the last measure taken. */
+  /** The end of an [[until]] loop: the last state, the cycles run,
+    * whether the stop test held (false when the bound stopped the
+    * loop) and the last measure taken. */
   final case class Stable[M](state: DataFrame, cycles: Int,
       converged: Boolean, last: M)
 
-  /** Runs `cycle` from `init` until `measure` repeats or `maxCycles`
-    * cycles have run. Each cycle's output is a LAZY checkpoint that
-    * `measure` materializes, so a cycle costs one job: `measure` must
-    * be a single-row scalar that scans every partition (an aggregate
-    * or a count, never a limit). `init` is measured as given — pass
-    * a materialized frame, or a `Reliable.cpLazy` one that this first
+  /** Runs `cycle` from `init` until `done` holds for the measure of the
+    * current state or `maxCycles` cycles have run. Each cycle's output
+    * is a LAZY checkpoint that `measure` materializes, so a cycle costs
+    * one job: `measure` must be a single-row scalar that scans every
+    * partition (an aggregate or a count, never a limit). `init` is
+    * measured as given, and a `done` init runs no cycle — pass a
+    * materialized frame, or a `Reliable.cpLazy` one that this first
     * measure materializes. The cycle that reaches the bound is not
     * measured: its state is materialized by the caller's own action.
-    * A measure that changes until the fixpoint (a strictly monotone
-    * sum or count) makes "repeats" mean "converged". */
-  def untilStable[M](init: DataFrame, maxCycles: Int)(
-      cycle: DataFrame => DataFrame)(measure: DataFrame => M): Stable[M] = {
+    * `done` sees the measures in order, once each. */
+  def until[M](init: DataFrame, maxCycles: Int)(
+      cycle: DataFrame => DataFrame)(measure: DataFrame => M)(
+      done: M => Boolean): Stable[M] = {
     var last = measure(init)
     var state = init
     var cycles = 0
-    var converged = false
+    var converged = done(last)
     while (!converged && cycles < maxCycles) {
       cycles += 1
       state = Reliable.cpLazy(cycle(state))
       if (cycles < maxCycles) {
-        val m = measure(state)
-        converged = m == last
-        last = m
+        last = measure(state)
+        converged = done(last)
       }
     }
     Stable(state, cycles, converged, last)
+  }
+
+  /** [[until]] the measure repeats: the init is never the last state,
+    * since its measure has nothing to repeat. A measure that changes
+    * until the fixpoint (a strictly monotone sum or count) makes
+    * "repeats" mean "converged". */
+  def untilStable[M](init: DataFrame, maxCycles: Int)(
+      cycle: DataFrame => DataFrame)(measure: DataFrame => M): Stable[M] = {
+    var prev: Option[M] = None
+    until(init, maxCycles)(cycle)(measure) { m =>
+      val repeated = prev.contains(m)
+      prev = Some(m)
+      repeated
+    }
   }
 
   /** Frontiers below this row count expand TWO levels per job in

@@ -233,55 +233,13 @@ object Wave16 {
       SELECT 5, 'graft', 'jobs_stage', 'drop table', 'public',
              CAST(0 AS BIGINT), 'synced'
     """)) { t =>
-      import t.spark.implicits._
-      val root = Layouts.root("ddljobs", t.dir)
-      Formats.deleteRecursively(new java.io.File(root))
-      graft.tools.DdlJournal.clear()
-      def slice(lo: Int, hi: Int) = t.orders
-        .filter(col("o_orderkey") >= lo && col("o_orderkey") < hi)
-        .select(col("o_orderkey"), col("o_totalprice"),
-          col("o_orderdate"))
-      // Row counts journal what LANDED: a footer-metadata count of
-      // the written files, not a second scan of orders.
-      def writtenRows(dir: String): Long =
-        t.spark.read.parquet(dir).count()
-      // 1: CREATE TABLE jobs_base PARTITION BY year
-      slice(0, 300).withColumn("yr", year(col("o_orderdate")))
-        .write.partitionBy("yr").parquet(s"$root/base")
-      graft.tools.DdlJournal.record("graft", "jobs_base",
-        "create table", writtenRows(s"$root/base"))
-      // 2: ADD COLUMN — a new generation carrying the added column
-      slice(300, 600).withColumn("note", lit("g2"))
-        .write.parquet(s"$root/addcol")
-      graft.tools.DdlJournal.record("graft", "jobs_base",
-        "add column", writtenRows(s"$root/addcol"))
-      // 3: MODIFY COLUMN — the widened generation (INT -> BIGINT key)
-      slice(600, 900)
-        .withColumn("o_orderkey", col("o_orderkey").cast("long"))
-        .write.parquet(s"$root/widen")
-      graft.tools.DdlJournal.record("graft", "jobs_base",
-        "modify column", writtenRows(s"$root/widen"))
-      // 4: EXCHANGE PARTITION — swap one year partition with a staged
-      // table; the journal records the rows that ARRIVED (the
-      // exchange's own audit counts).
-      val pickYr = new java.io.File(s"$root/base").listFiles()
-        .filter(_.getName.startsWith("yr=")).map(_.getName)
-        .min.stripPrefix("yr=")
-      slice(900, 1200).write.parquet(s"$root/stage")
-      val (in, _) = graft.sources.ExchangePartition.exchange(
-        t.spark, s"$root/base", s"yr=$pickYr", s"$root/stage")
-      graft.tools.DdlJournal.record("graft", "jobs_base",
-        "exchange partition", in)
-      // 5: DROP TABLE through the recycle bin (unlink, not erase)
-      graft.tools.RecycleBin.drop(s"$root/stage", s"$root/bin")
-      graft.tools.DdlJournal.record("graft", "jobs_stage",
-        "drop table", 0L)
-      graft.tools.DdlJournal.history()
-        .map(j => (j.id, j.db, j.table, j.jobType, j.schemaState,
-          j.rowCount, j.state))
-        .toDF("job_id", "db_name", "table_name", "job_type",
-          "schema_state", "row_count", "state")
-        .withColumn("job_id", col("job_id").cast("int"))
+      // Each run works under its own per-process child of the shared
+      // root, so two processes over one data dir never meet, and a
+      // partial tree another run left behind is never read.
+      val root = s"${Layouts.root("ddljobs", t.dir)}/run-" +
+        ProcessHandle.current().pid()
+      try ddlJobs(t, root)
+      finally Formats.deleteRecursively(new java.io.File(root))
     },
 
     // Multi-column partition pruning — PARTITION BY RANGE COLUMNS
@@ -320,4 +278,58 @@ object Wave16 {
           sum(Exact.dec2(col("o_totalprice"))).cast("double").as("total"))
     },
   )
+
+  /** q_ddl_jobs' body: runs the five DDL operations under `root`,
+    * which it clears first, and returns the journal as a local frame
+    * that reads none of the files. */
+  private[graft] def ddlJobs(t: Tables, root: String): DataFrame = {
+    import t.spark.implicits._
+    Formats.deleteRecursively(new java.io.File(root))
+    graft.tools.DdlJournal.clear()
+    def slice(lo: Int, hi: Int) = t.orders
+      .filter(col("o_orderkey") >= lo && col("o_orderkey") < hi)
+      .select(col("o_orderkey"), col("o_totalprice"),
+        col("o_orderdate"))
+    // Row counts journal what LANDED: a footer-metadata count of
+    // the written files, not a second scan of orders.
+    def writtenRows(dir: String): Long =
+      t.spark.read.parquet(dir).count()
+    // 1: CREATE TABLE jobs_base PARTITION BY year
+    slice(0, 300).withColumn("yr", year(col("o_orderdate")))
+      .write.partitionBy("yr").parquet(s"$root/base")
+    graft.tools.DdlJournal.record("graft", "jobs_base",
+      "create table", writtenRows(s"$root/base"))
+    // 2: ADD COLUMN — a new generation carrying the added column
+    slice(300, 600).withColumn("note", lit("g2"))
+      .write.parquet(s"$root/addcol")
+    graft.tools.DdlJournal.record("graft", "jobs_base",
+      "add column", writtenRows(s"$root/addcol"))
+    // 3: MODIFY COLUMN — the widened generation (INT -> BIGINT key)
+    slice(600, 900)
+      .withColumn("o_orderkey", col("o_orderkey").cast("long"))
+      .write.parquet(s"$root/widen")
+    graft.tools.DdlJournal.record("graft", "jobs_base",
+      "modify column", writtenRows(s"$root/widen"))
+    // 4: EXCHANGE PARTITION — swap one year partition with a staged
+    // table; the journal records the rows that ARRIVED (the
+    // exchange's own audit counts).
+    val pickYr = new java.io.File(s"$root/base").listFiles()
+      .filter(_.getName.startsWith("yr=")).map(_.getName)
+      .min.stripPrefix("yr=")
+    slice(900, 1200).write.parquet(s"$root/stage")
+    val (in, _) = graft.sources.ExchangePartition.exchange(
+      t.spark, s"$root/base", s"yr=$pickYr", s"$root/stage")
+    graft.tools.DdlJournal.record("graft", "jobs_base",
+      "exchange partition", in)
+    // 5: DROP TABLE through the recycle bin (unlink, not erase)
+    graft.tools.RecycleBin.drop(s"$root/stage", s"$root/bin")
+    graft.tools.DdlJournal.record("graft", "jobs_stage",
+      "drop table", 0L)
+    graft.tools.DdlJournal.history()
+      .map(j => (j.id, j.db, j.table, j.jobType, j.schemaState,
+        j.rowCount, j.state))
+      .toDF("job_id", "db_name", "table_name", "job_type",
+        "schema_state", "row_count", "state")
+      .withColumn("job_id", col("job_id").cast("int"))
+  }
 }

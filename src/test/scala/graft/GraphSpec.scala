@@ -93,6 +93,35 @@ class GraphSpec extends SparkSpecBase {
     assert(res.values.forall(_ >= 3) && res.nonEmpty)
   }
 
+  test("kcore: a bound below the fixpoint depth returns the reference " +
+      "peel truncated at that bound") {
+    val g = graph.Graph.derived(t.orders)
+    val adj = g.oriented("both").collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+      .groupBy(_._1).map { case (s, es) => s -> es.map(_._2).toSet }
+    // stages(r): the survivors after r peels, up to the fixpoint.
+    var stages = Vector(adj.keySet)
+    var peeled = true
+    while (peeled) {
+      val nodes = stages.last
+      val next = nodes.filter(v => adj(v).count(nodes.contains) >= 3)
+      peeled = next != nodes
+      if (peeled) stages :+= next
+    }
+    val depth = stages.size - 1
+    assert(depth >= 2, s"the fixpoint takes $depth peels: too shallow")
+    for (r <- Seq(0, 1, depth - 1)) {
+      val res = g.kCore(3, r).collect()
+        .map(x => x.getAs[Long]("node") -> x.getAs[Long]("deg")).toMap
+      // After r peels, a survivor keeps the rows to other survivors;
+      // one left with none has no row, so no degree.
+      val nodes = stages(r)
+      val expected = nodes.map(v => v -> adj(v).count(nodes.contains).toLong)
+        .filter(_._2 > 0).toMap
+      assert(res == expected, s"maxRounds = $r")
+    }
+  }
+
   test("personalized pagerank: mass concentrates on seeds, " +
       "zero off the seed component") {
     import org.apache.spark.sql.functions._

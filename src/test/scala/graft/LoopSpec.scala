@@ -71,6 +71,29 @@ class LoopSpec extends SparkSpecBase {
     assert(x(r.state) == 2L)
   }
 
+  test("until stops when its test holds, and on a done init runs no " +
+      "cycle") {
+    var seen = Vector.empty[Long]
+    val init = Seq(0L).toDF("x")
+    def run(maxCycles: Int)(done: Long => Boolean) =
+      Loop.until(init, maxCycles)(
+        _.select(least(col("x") + 1, lit(3L)).as("x"))) { df =>
+        df.agg(sum(col("x"))).head().getLong(0)
+      } { m => seen :+= m; done(m) }
+    val r = run(100)(_ >= 2)
+    assert(r.converged && r.cycles == 2 && r.last == 2L, r.toString)
+    assert(seen == Vector(0L, 1L, 2L) && x(r.state) == 2L)
+    seen = Vector.empty
+    val d = run(100)(_ == 0L)
+    assert(d.converged && d.cycles == 0 && (d.state eq init), d.toString)
+    assert(seen == Vector(0L))
+    // The bound cycle is not measured, so the test does not see it.
+    seen = Vector.empty
+    val b = run(2)(_ >= 3)
+    assert(!b.converged && b.cycles == 2 && seen == Vector(0L, 1L))
+    assert(x(b.state) == 2L)
+  }
+
   /** BFS over the directed chain 0 → 1 → … → last through
     * [[Loop.levels]]; returns node → dist and the number of levels the
     * driver asked for. */

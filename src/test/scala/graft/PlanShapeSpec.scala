@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Sum}
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{FilterExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -679,20 +680,11 @@ class PlanShapeSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
       .queryExecution.executedPlan
     assert(collect(grouped) { case x: ShuffleExchangeLike => x }.isEmpty,
       s"groupBy(src) shuffles the table:\n$grouped")
-    g.labelPropagation(iters = 1).collect()  // memoizes the node count
+    // Two rounds, so one joins the label state: memoizes the node count.
+    g.labelPropagation(iters = 2).collect()
     // Each Loop.rounds checkpoint is one action; its executed plan may
     // broadcast the |V|-row label state and nothing else.
-    val rounds = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
-    val listener = new QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        rounds.synchronized { rounds += qe.executedPlan }
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      g.labelPropagation(iters = 4)
-      org.apache.spark.sql.GraftSqlShim.drainListenerBus(spark)
-    } finally spark.listenerManager.unregister(listener)
+    val rounds = actions(g.labelPropagation(iters = 4)).map(_._2)
     assert(rounds.size == 2, "two checkpoints of two rounds each")
     rounds.foreach { p =>
       assert(collect(p) { case x: ShuffleExchangeLike => x }.isEmpty,
@@ -701,6 +693,53 @@ class PlanShapeSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
       assert(bcast.forall(_.output.map(_.name) == Seq("node", "lbl")),
         s"an LPA round broadcasts the edge table:\n$p")
     }
+  }
+
+  test("no k-core peel exchanges the keyed BOTH table: the degree " +
+      "aggregate and both semi-joins stream it") {
+    val g = graph.Graph.derived(t.orders)
+    g.kCore(3, 8).collect()  // memoizes the node count
+    val plans = actions(g.kCore(3, 8))
+    // One lazy checkpoint per peel, after the one of the initial
+    // degrees; this graph needs at least two peels.
+    val peels = plans.collect { case ("localCheckpoint", p) => p }
+      .filter(_.toString.contains("LeftSemi"))
+    assert(peels.size >= 2, s"${plans.map(_._1)}")
+    peels.foreach { p =>
+      assert(collect(p) { case s: InMemoryTableScanExec => s }.nonEmpty,
+        s"a peel that does not scan the keyed table:\n$p")
+    }
+    for ((_, p) <- plans; x <- collect(p) {
+        case x: ShuffleExchangeLike => x
+        case x: BroadcastExchangeLike => x }) {
+      assert(collect(x) { case s: InMemoryTableScanExec => s }.isEmpty,
+        s"a k-core action exchanges the edge table:\n$p")
+    }
+  }
+
+  test("g_nhop broadcasts the filtered first hop, not the edge table") {
+    val p = Registry.byName("g_nhop").run(t).queryExecution.executedPlan
+    val bcasts = collect(p) { case b: BroadcastExchangeLike => b }
+    assert(bcasts.size == 1, s"$p")
+    assert(collect(bcasts.head) { case f: FilterExec => f }
+      .exists(_.condition.sql.contains("< 20")),
+      s"the broadcast side is not the `src < 20` hop:\n$p")
+  }
+
+  /** The (action name, executed plan) of every action `body` runs. */
+  private def actions(body: => Unit): Seq[(String, SparkPlan)] = {
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(String, SparkPlan)]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.synchronized { seen += f -> qe.executedPlan }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      org.apache.spark.sql.GraftSqlShim.drainListenerBus(spark)
+    } finally spark.listenerManager.unregister(listener)
+    seen.toSeq
   }
 
   /** The SUM/AVG functions of `name`'s executed plan (subqueries

@@ -188,10 +188,31 @@ class Wave16Spec extends SparkSpecBase {
       "exchange must journal the exchange's own audit count")
     assert(rows(4).getString(3) == "drop table" && rows(4).getLong(5) == 0L)
     // The drop retained the displaced partition in the bin (unlink,
-    // not erase).
-    val root = graft.sources.Layouts.root("ddljobs", t.dir)
-    val binEntries = new java.io.File(s"$root/bin").listFiles()
-    assert(binEntries != null && binEntries.nonEmpty)
+    // not erase). The registry entry deletes its per-run tree when it
+    // returns, so the body runs once more under a root kept here.
+    val root = "/tmp/graft_ddljobs_spec"
+    try {
+      graft.operators.Wave16.ddlJobs(t, root)
+      val binEntries = new java.io.File(s"$root/bin").listFiles()
+      assert(binEntries != null && binEntries.nonEmpty)
+    } finally graft.sources.Formats.deleteRecursively(new java.io.File(root))
+  }
+
+  test("q_ddl_jobs runs under a per-process child it deletes: a stray " +
+      "partial tree at the shared root does not fail it") {
+    val shared = graft.sources.Layouts.root("ddljobs", t.dir)
+    val stray = new java.io.File(s"$shared/widen")
+    val marker = new java.io.File(stray, "part-00000.parquet")
+    stray.mkdirs()
+    marker.createNewFile()
+    try {
+      val rows = Registry.byName("q_ddl_jobs").run(t).collect()
+      assert(rows.length == 5)
+      assert(marker.exists(), "another run's tree must be left alone")
+      val mine = new java.io.File(
+        s"$shared/run-${ProcessHandle.current().pid()}")
+      assert(!mine.exists(), "the run's own tree outlived it")
+    } finally graft.sources.Formats.deleteRecursively(stray)
   }
 
   test("q_scan_partition_rangecol prunes BOTH partition columns at the scan") {
