@@ -9,8 +9,9 @@ import scala.util.matching.Regex
   * while assembling its plan) but the final plan is not executed, so
   * a dump is cheap and safe to run beside nothing else. An unknown
   * name throws. Plans are written [[normalize]]d, with the data dir
-  * shown as `<sfDir>`, so dumps of two checkouts compare with a plain
-  * `diff -r`.
+  * shown as `<sfDir>` and the session's warehouse dir as
+  * `<warehouse>` ([[redact]]), so dumps of two checkouts compare with
+  * a plain `diff -r`.
   * The session is `local[4]`, like Verify and the benchmark's 4-core
   * runs, unless `SPARK_GRAFT_CPUS` says otherwise. Without a name list
   * every registry entry is dumped, in registry order.
@@ -22,6 +23,7 @@ object PlanDump {
     val outDir = args(1)
     val spark = Run.session(4)
     val t = Tables(spark, args(0))
+    val warehouse = spark.conf.get("spark.sql.warehouse.dir")
     new java.io.File(outDir).mkdirs()
     val entries =
       if (args.length > 2) Run.select(args(2).split(",")) else Registry.all
@@ -29,8 +31,8 @@ object PlanDump {
       try {
         java.nio.file.Files.write(
           java.nio.file.Paths.get(s"$outDir/${q.name}.txt"),
-          normalize(tools.Explain.formatted(q.name, t))
-            .replace(args(0), "<sfDir>").getBytes("UTF-8"))
+          redact(tools.Explain.formatted(q.name, t), args(0), warehouse)
+            .getBytes("UTF-8"))
         println(s"[plandump] wrote ${q.name}")
       } catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[plandump] ${q.name} FAILED: ${e.getMessage}")
@@ -38,6 +40,16 @@ object PlanDump {
     }
     spark.stop()
   }
+
+  /** [[normalize]]d `plan` with the paths that differ between two
+    * checkouts shown as placeholders: the warehouse dir (a `file:` URI
+    * or a plain path; tables saved there, such as a bucketed
+    * customer copy, are scanned from it) as `<warehouse>` and the
+    * data dir as `<sfDir>`. */
+  def redact(plan: String, sfDir: String, warehouse: String): String =
+    normalize(plan)
+      .replace(warehouse.stripPrefix("file:").stripSuffix("/"), "<warehouse>")
+      .replace(sfDir, "<sfDir>")
 
   /** `plan` without the numbers that differ between two runs of the
     * same program: expression ids (`#12`), plan ids (`[plan_id=7]`)

@@ -23,6 +23,12 @@ import org.apache.spark.sql.functions._
   * over the table, or a join that broadcasts the state into it
   * ([[broadcastVertices]]), plans no exchange of the edges. That
   * table is only ever scanned, never checkpointed as loop state.
+  * LPA's rounds are such aggregates with no checkpoint between them
+  * ([[labelPropagation]] has the proofs): on the identity labels the
+  * mode is `min(dst)`, because the table is distinct and every
+  * neighbour label counts once; later, it is a count per
+  * `(src, lbl)` and then `min(struct(-cnt, lbl))` per `src`, which is
+  * Spark's deterministic `mode`.
   *
   * Edge schema: `src: BIGINT, dst: BIGINT`.
   */
@@ -69,11 +75,17 @@ final case class Graph(edges: DataFrame) {
     * [[bothCp]].
     * Lost blocks recompute from lineage (this Graph's edge list), so
     * `spark.graft.graph.checkpointDir` does not cover this table. */
-  private[graft] lazy val bothKeyed: DataFrame = {
+  private[graft] def bothKeyed: DataFrame = keyed._1
+
+  /** The row count of [[bothKeyed]], 2m for a graph of m undirected
+    * edges (a self-loop counts once): the count that materializes the
+    * table, kept. */
+  private[graft] def bothKeyedRows: Long = keyed._2
+
+  private lazy val keyed: (DataFrame, Long) = {
     val both = oriented("out").union(oriented("in"))
       .repartition(col("src")).distinct().persist()
-    both.count()
-    both
+    (both, both.count())
   }
   private lazy val outCp: DataFrame = new Cp(oriented("out")).cp()
   private lazy val inCp: DataFrame = new Cp(oriented("in")).cp()
@@ -568,37 +580,57 @@ final case class Graph(edges: DataFrame) {
     * too coarse (CC merges everything touching; LPA keeps densely-
     * linked clusters apart). Fully deterministic: every round, each
     * vertex adopts its neighbors' most frequent label, ties broken by
-    * the smallest label — Spark's deterministic `mode(lbl, true)`,
-    * so the same graph always yields the same communities (classic
-    * LPA's random tie-breaks would be un-oracle-able). Fixed `iters`
-    * rounds ([[Loop.rounds]]), no convergence test — synchronous LPA
-    * can 2-cycle on bipartite-ish structures, so a bounded unrolled
-    * run IS the semantics (and what the unrolled SQL oracle
-    * reproduces).
+    * the smallest label — the result of Spark's deterministic
+    * `mode(lbl, true)`, so the same graph always yields the same
+    * communities (classic LPA's random tie-breaks would be
+    * un-oracle-able). Fixed `iters` rounds, no convergence test —
+    * synchronous LPA can 2-cycle on bipartite-ish structures, so a
+    * bounded unrolled run IS the semantics (and what the unrolled SQL
+    * oracle reproduces).
     *
-    * Each round is ONE per-vertex aggregate over [[bothKeyed]], which
-    * is partitioned on `src`, so no round moves the edge table: round 1
-    * (identity labels) is `mode(dst)` with no join at all, and a later
-    * round joins the |V|-row label state through [[broadcastVertices]].
-    * When the state does not fit, the planner picks the join, which
-    * shuffles the edges by `dst` every round. The per-vertex buffer
-    * holds one count per distinct neighbour label, so it is bounded
-    * by the vertex's degree. */
+    * Each round is plain aggregates over [[bothKeyed]], which is
+    * partitioned on `src`, so no round moves the edge table:
+    *  - Round 1 (identity labels) is `min(dst)` per `src`, with no
+    *    join. Proof: [[bothKeyed]] is distinct, so each neighbour of
+    *    a vertex appears once, and on identity labels so does each
+    *    neighbour label. Every label then counts 1, and the
+    *    most-frequent-then-smallest label is the smallest one.
+    *  - A later round joins the |V|-row label state through
+    *    [[broadcastVertices]] and takes the mode in two aggregates:
+    *    `count(lbl)` per `(src, lbl)`, then `min(struct(-cnt, lbl))`
+    *    per `src`, the most frequent label and the smallest on ties.
+    *    That is Spark 4.1's `Mode.eval` with `reverseOpt = Some(true)`
+    *    (max by count, then by reversed label order), null labels
+    *    included: `count(lbl)` gives a null label 0, so it wins only
+    *    when every neighbour label is null, where `mode` returns null
+    *    too. The `src` partitioning satisfies the `(src, lbl)`
+    *    clustering, so neither level plans an exchange. The count is a
+    *    codegen'd hash aggregate; the struct `min` plans as a sort
+    *    aggregate over an in-partition sort. Both replace `mode`'s
+    *    object aggregate, a per-vertex hash map of boxed labels.
+    * When the state does not fit the broadcast threshold, the planner
+    * picks the join, which shuffles the edges by `dst` every round.
+    *
+    * No round is checkpointed: each state is read once, by the next
+    * round's join, whose broadcast job (or, unbroadcast, its shuffle
+    * stage under AQE) computes it once. The result is one lazy
+    * checkpoint, materialized by the caller's first action, so a
+    * caller that reads the labels several times (modularity) computes
+    * them once. */
   def labelPropagation(iters: Int): DataFrame = {
     val e = bothKeyed
-    val init = e.select(col("src").as("node")).distinct()
+    val identity = e.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("lbl"))
-    // The identity labels (only ever the first round's input) need no
-    // join: a neighbour's label is its id.
-    def round(l: DataFrame): DataFrame = {
-      val nbrLabels =
-        if (l eq init) e.select(col("src"), col("dst").as("lbl"))
-        else e.join(broadcastVertices(l),
-          col("dst") === col("node")).select(col("src"), col("lbl"))
-      nbrLabels.groupBy(col("src").as("node"))
-        .agg(mode(col("lbl"), deterministic = true).as("lbl"))
-    }
-    Loop.rounds(init, iters)(round)
+    val first = e.groupBy(col("src").as("node"))
+      .agg(min(col("dst")).as("lbl"))
+    def round(l: DataFrame): DataFrame =
+      e.join(broadcastVertices(l), col("dst") === col("node"))
+        .groupBy(col("src"), col("lbl")).agg(count(col("lbl")).as("cnt"))
+        .groupBy(col("src").as("node"))
+        .agg(min(struct((-col("cnt")).as("c"), col("lbl"))).as("m"))
+        .select(col("node"), col("m.lbl").as("lbl"))
+    if (iters <= 0) identity
+    else (2 to iters).foldLeft(first)((l, _) => round(l)).cpLazy()
   }
 
   /** |V| of the BOTH orientation — every vertex is the `src` of at

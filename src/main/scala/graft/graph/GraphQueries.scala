@@ -817,7 +817,8 @@ object GraphQueries {
       val g = Graph.derived(t.orders)
       val und = g.bothKeyed
       val lab = g.labelPropagation(iters = 4)
-      val m2 = und.agg(count(lit(1)).as("m2"))
+      // 2m, counted when the table was materialized.
+      val m2 = lit(g.bothKeyedRows)
       def labels(node: String, lbl: String) = g.broadcastVertices(
         lab.select(col("node").as(node), col("lbl").as(lbl)))
       val within = und
@@ -829,13 +830,13 @@ object GraphQueries {
         .join(labels("src", "lbl"), "src")
         .groupBy("lbl")
         .agg(count(lit(1)).as("d"), countDistinct(col("src")).as("sz"))
-      degs.join(within, Seq("lbl"), "left").crossJoin(broadcast(m2))
+      degs.join(within, Seq("lbl"), "left")
         .select(col("lbl"), col("sz"),
           coalesce(col("w2"), lit(0L)).as("w2"),
           col("d").as("deg_sum"),
-          round(coalesce(col("w2"), lit(0L)) / (lit(1.0) * col("m2"))
-            - (col("d") / (lit(1.0) * col("m2")))
-              * (col("d") / (lit(1.0) * col("m2"))), 6).as("contrib"))
+          round(coalesce(col("w2"), lit(0L)) / (lit(1.0) * m2)
+            - (col("d") / (lit(1.0) * m2))
+              * (col("d") / (lit(1.0) * m2)), 6).as("contrib"))
     },
 
     // Deterministic random-walk corpus (DeepWalk/node2vec sampling —

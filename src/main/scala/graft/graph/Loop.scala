@@ -21,7 +21,18 @@ import org.apache.spark.sql.functions.{col, count, lit, when}
   *  - [[levels]]: level-synchronous BFS, two levels per job while the
   *    frontier is small.
   * A new kernel picks one of these instead of pairing `cp`/`cpLazy`
-  * with its own scalar. */
+  * with its own scalar.
+  *
+  * Label propagation uses none of them. Its state is |V| rows that
+  * the next round reads once, through a broadcast join, so the
+  * broadcast job computes each state once and ships it, and when the
+  * state does not fit the threshold AQE runs each shuffle stage once.
+  * A per-round checkpoint would only add a job, so LPA folds its
+  * rounds into one plan and checkpoints the result lazily
+  * (`Graph.labelPropagation`). PageRank, PPR and catalog PageRank
+  * keep [[rounds]]: their rank state joins through the planner's own
+  * choice, and a fully unrolled 10-round PageRank plan measured
+  * slower (`Graph.pageRankState`). */
 object Loop {
 
   /** `n` applications of `step` from `init`, TWO per eager checkpoint

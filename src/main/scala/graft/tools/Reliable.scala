@@ -17,7 +17,8 @@ import org.apache.spark.sql.DataFrame
   *
   * The callers, so the sites the conf covers: the loop state of the
   * iterative kernels (every `graph.Loop` driver, the per-Graph edge
-  * tables and the other graph kernels' checkpoints), the streaming
+  * tables, LPA's result (one lazy checkpoint; its rounds take none)
+  * and the other graph kernels' checkpoints), the streaming
   * ingest sinks' novel sets and the IVF build's centroid table. Not
   * covered: memoized session inputs such as `Graph.derived`'s edge
   * list and `CatalogQueries`' `edgeMemo`/`wprMemo`, the per-Graph

@@ -1,9 +1,10 @@
 package graft
 
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Sum}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Mode, Sum}
 import org.apache.spark.sql.execution.{FilterExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.types.DecimalType
@@ -682,17 +683,26 @@ class PlanShapeSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
       s"groupBy(src) shuffles the table:\n$grouped")
     // Two rounds, so one joins the label state: memoizes the node count.
     g.labelPropagation(iters = 2).collect()
-    // Each Loop.rounds checkpoint is one action; its executed plan may
-    // broadcast the |V|-row label state and nothing else.
-    val rounds = actions(g.labelPropagation(iters = 4)).map(_._2)
-    assert(rounds.size == 2, "two checkpoints of two rounds each")
-    rounds.foreach { p =>
-      assert(collect(p) { case x: ShuffleExchangeLike => x }.isEmpty,
-        s"an LPA round shuffles:\n$p")
-      val bcast = collect(p) { case b: BroadcastExchangeLike => b }
-      assert(bcast.forall(_.output.map(_.name) == Seq("node", "lbl")),
-        s"an LPA round broadcasts the edge table:\n$p")
-    }
+    def lpa(): Unit = g.labelPropagation(iters = 4)
+      .write.format("noop").mode("overwrite").save()
+    // The four rounds are one lazy plan under the result's checkpoint:
+    // rounds 2-4 each broadcast the |V|-row state of the round before,
+    // and nothing moves the edge table.
+    val plans = actions(lpa()).map(_._2)
+    val shown = plans.mkString("\n")
+    val nodes = plans.flatMap(collect(_) { case n => n })
+    assert(nodes.collect { case x: ShuffleExchangeLike => x }.isEmpty,
+      s"an LPA round shuffles:\n$shown")
+    val bcast = nodes.collect { case b: BroadcastExchangeLike => b }
+    assert(bcast.size == 3 &&
+      bcast.forall(_.output.map(_.name) == Seq("node", "lbl")),
+      s"LPA broadcasts other than the three label states:\n$shown")
+    // The mode is a count and a struct min, not Mode's per-vertex map.
+    assert(nodes.collect { case a: ObjectHashAggregateExec => a }.isEmpty &&
+      !nodes.exists(_.expressions.exists(_.exists(_.isInstanceOf[Mode]))),
+      s"an LPA round aggregates with Mode:\n$shown")
+    // Three broadcasts and the write, which materializes the checkpoint.
+    assert(Run.counts(spark)(lpa()).jobs == 4)
   }
 
   test("no k-core peel exchanges the keyed BOTH table: the degree " +

@@ -34,4 +34,24 @@ class RunSpec extends SparkSpecBase {
     t.region
     assert(Run.counts(spark)(t.region).jobs == 0)
   }
+
+  test("PlanDump.redact: plans that differ only in the warehouse and " +
+    "data dirs dump equal") {
+    def plan(checkout: String, data: String) =
+      s"""(1) Scan parquet spark_catalog.default.graft_b_customer
+         |Location: InMemoryFileIndex [file:$checkout/spark-warehouse/graft_b_customer_3]
+         |(2) Scan parquet
+         |Location: InMemoryFileIndex [file:$data/orders.parquet]
+         |Output [1]: [o_custkey#41L]""".stripMargin
+    def dump(checkout: String, data: String, warehouse: String) =
+      PlanDump.redact(plan(checkout, data), data, warehouse)
+    val a = dump("/work/a/graft", "/data/sf0.1",
+      "file:/work/a/graft/spark-warehouse")
+    val b = dump("/home/b/graft-2", "/mnt/sf0.1",
+      "/home/b/graft-2/spark-warehouse/")
+    assert(a == b, s"\n$a\n---\n$b")
+    assert(a.contains("[file:<warehouse>/graft_b_customer_3]") &&
+      a.contains("[file:<sfDir>/orders.parquet]") &&
+      a.contains("o_custkey#1L"), a)
+  }
 }

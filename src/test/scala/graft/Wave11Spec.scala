@@ -80,23 +80,39 @@ class Wave11Spec extends SparkSpecBase {
     // Ties go to the smallest label, in the join-free first round and
     // in the joined later ones: on a 6-ring every vertex's two
     // neighbours tie in round 1, and four vertices tie again in round
-    // 2; the star's hub ties over its four leaves. Checked against a
-    // direct synchronous LPA over the adjacency lists.
+    // 2; the star's hub ties over its four leaves. 30 has a self-loop,
+    // so it is its own neighbour. 60-65 is given twice one way and
+    // once the other: each neighbour counts once, so 60 gets 62 in
+    // round 1 and 60 in round 2, where counting every given edge
+    // would make 65, then 59, its mode. Checked against a direct
+    // synchronous LPA over the adjacency lists for 0-5 rounds (an odd
+    // count once ended on a single-round checkpoint), with and
+    // without the label state broadcast.
     val ring = (0L until 6L).map(i => (i, (i + 1) % 6))
     val star = Seq(7L, 3L, 9L, 5L).map(leaf => (50L, leaf))
-    val edges = ring ++ star
+    val selfLoop = Seq((30L, 30L), (30L, 31L), (31L, 32L), (32L, 30L))
+    val parallel = Seq((60L, 65L), (60L, 65L), (65L, 60L), (65L, 59L),
+      (60L, 62L), (60L, 63L))
+    val edges = ring ++ star ++ selfLoop ++ parallel
     val adj = (edges ++ edges.map(_.swap)).distinct.groupBy(_._1)
       .map { case (v, es) => v -> es.map(_._2) }
-    for (iters <- 1 to 4) {
-      val expected = (1 to iters).foldLeft(adj.map { case (v, _) => v -> v }) {
+    def reference(iters: Int): Map[Long, Long] =
+      (1 to iters).foldLeft(adj.map { case (v, _) => v -> v }) {
         (l, _) => adj.map { case (v, nbrs) =>
           v -> nbrs.groupBy(l).toSeq
             .minBy { case (label, ns) => (-ns.size, label) }._1 }
       }
-      val got = graph.Graph(edges.toDF("src", "dst"))
-        .labelPropagation(iters).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == expected, s"after $iters rounds")
+    assert(reference(1)(60L) == 62L && reference(2)(60L) == 60L &&
+      reference(1)(30L) == 30L)
+    val g = graph.Graph(edges.toDF("src", "dst"))
+    for (threshold <- Seq(None, Some("-1"))) {
+      threshold.foreach(spark.conf.set(key, _))
+      try for (iters <- 0 to 5) {
+        val got = g.labelPropagation(iters).collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(got == reference(iters),
+          s"after $iters rounds, broadcast threshold $threshold")
+      } finally spark.conf.unset(key)
     }
   }
 
